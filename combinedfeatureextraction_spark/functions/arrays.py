@@ -1,14 +1,13 @@
-"""Array-payload column expressions: bbox, dot/cosine, token slicing,
-payload checksums. All JVM-side higher-order functions — zero Python in
-the hot path (the reference's per-pixel loop,
+"""Array-payload column expressions: bbox, payload sums, dot/cosine,
+shoelace area, payload digests. All JVM-side higher-order functions —
+zero Python in the hot path (the reference's per-pixel loop,
 extraction_utils/PAS_deconvolution.py:67-89, is the anti-pattern these
 exist to kill).
 
-Reference analogs (SURVEY.md A6/A7/X8/S2/F10):
+Reference analogs (SURVEY.md A6/A7/X8/F10):
  - bbox min/max over a points array (FeatureExtractor.py:295-298)
  - payload-mass sums (`np.sum(mask)`, FeatureExtractor.py:388,530-538)
  - shoelace area (`cv2.contourArea`, extract_reference_features.py:391)
- - crop / region slice (`read_region`, FeatureExtractor.py:300)
 """
 
 from __future__ import annotations
@@ -83,13 +82,6 @@ def cosine(a: Column | str, b: Column | str) -> Column:
     return F.when(den == 0, F.lit(0.0)).otherwise(num / den)
 
 
-def slice_region(col: Column | str, start: Column, length: Column) -> Column:
-    """1-indexed array slice — the `read_region((x,y),0,(w,h))` crop analog
-    (S2). With partition pruning upstream this touches only matching rows'
-    payload bytes (Arrow offsets make the slice O(length))."""
-    return F.slice(_c(col), start, length)
-
-
 def shoelace_area(xs: Column | str, ys: Column | str) -> Column:
     """|Σ xᵢ·yᵢ₊₁ − xᵢ₊₁·yᵢ| / 2 over closed polygon arrays (X8,
     `cv2.contourArea`)."""
@@ -103,12 +95,6 @@ def shoelace_area(xs: Column | str, ys: Column | str) -> Column:
         lambda p, q: p - q,
     )
     return F.abs(F.aggregate(cross, F.lit(0.0), lambda acc, v: acc + v)) / 2
-
-
-def payload_checksum(col: Column | str) -> Column:
-    """xxhash64 over the array — the per-row byte-equality witness for the
-    tokens passthrough invariant (BASELINE.json input_hint)."""
-    return F.xxhash64(_c(col))
 
 
 def payload_digest(col: Column | str) -> Column:
@@ -125,12 +111,3 @@ def payload_digest(col: Column | str) -> Column:
         lambda x, i: F.round(x.cast("double") * 1e6, 0).cast("long") * (i + F.lit(1)),
     )
     return F.aggregate(terms, F.lit(0).cast("long"), lambda a, x: a + x)
-
-
-def masked_payload_mean(col: Column | str, pred) -> Column:
-    """mean of array elements where pred(x) — in-payload masked mean (A7/
-    A14 payload form): filter + fold, no explode, no shuffle."""
-    kept = F.filter(_c(col), pred)
-    n = F.size(kept)
-    s = F.aggregate(kept, F.lit(0.0), lambda acc, x: acc + x.cast("double"))
-    return F.when(n == 0, F.lit(0.0)).otherwise(s / n)

@@ -256,13 +256,6 @@ class _EntropyReader:
         return v if v >= (1 << (n - 1)) else v - (1 << n) + 1
 
 
-def _extend(v: int, n: int) -> int:
-    """T.81 F.12 EXTEND: map the n-bit magnitude to its signed value."""
-    if n == 0:
-        return 0
-    return v if v >= (1 << (n - 1)) else v - (1 << n) + 1
-
-
 class _ScanState:
     """Mutable per-image entropy-decode state shared across scans:
     per-component zigzag-order coefficient stores (progressive scans

@@ -36,7 +36,9 @@ def _stat_exprs(feature: str, approx: bool) -> list[Column]:
     # every bench rep. `0.0D` / `double('Infinity')` keep literal types
     # identical to F.lit(0.0) / F.lit(float('inf')); duplicated aggregate
     # text dedups in planning exactly like the shared Column subtree did.
-    q = f"`{feature}`"
+    # An embedded backtick is doubled (SQL identifier quoting).
+    name = feature.replace("`", "``")
+    q = f"`{name}`"
     med = f"percentile_approx({q}, 0.5D, 10000)" if approx else f"median({q})"
     pairs = [
         ("sum", f"sum({q})"),
@@ -50,7 +52,7 @@ def _stat_exprs(feature: str, approx: bool) -> list[Column]:
         F.expr(
             f"CASE WHEN {e} IS NULL OR isnan({e})"
             f" OR {e} = double('Infinity') OR {e} = double('-Infinity')"
-            f" THEN 0.0D ELSE {e} END AS `{feature}_{s}`"
+            f" THEN 0.0D ELSE {e} END AS `{name}_{s}`"
         )
         for s, e in pairs
     ]

@@ -6,8 +6,8 @@ element matched against the most-specific enclosing region state
 110-133,397-400) — generalized to the temporal axis: each probe row is
 matched to the most recent build row with ``build.ts <= probe.ts`` for the
 same key. Zero temporal leakage by construction: no build row with
-``ts > probe.ts`` can ever influence the output (verified by the prefix
-test in tests/test_asof.py).
+``ts > probe.ts`` can ever influence the output (verified by
+tests/test_pipeline_golden.py::test_zero_temporal_leakage).
 
 Three physical strategies, one logical semantics:
 
@@ -16,22 +16,27 @@ Three physical strategies, one logical semantics:
    ordered by (ts, tag). ONE shuffle, no UDF, whole-stage codegen
    end-to-end; the partition sort is the "sorted-merge" — this is the plan
    you want at 100 TB because it never materializes a join hash table and
-   AQE can split skewed partitions of the sort.
+   AQE can split skewed partitions of the sort. Salting (``salt`` > 1,
+   union only): hot Zipf keys are split across ``salt`` sub-partitions —
+   build rows replicated to every salt, probe rows hashed to one —
+   bounding the largest sort partition at 1/salt of the hot key. Same
+   results, verified in tests.
+
+ - ``grid``: the dim-sized build side is compiled on the driver into a
+   dense (key × time-bucket) index, broadcast-joined to the probe and
+   resolved by a codegen'd CASE cascade — zero shuffles. Falls back to
+   ``union`` when the build side is too large, too dense or too sparse
+   for the index; the only strategy with a streaming form
+   (streaming.enrich).
 
  - ``cogroup``: entity-hash-bucketed ``groupBy().cogroup().applyInPandas``
    running ``pandas.merge_asof`` per bucket (Arrow-vectorized, zero
-   per-row Python). Use when per-probe tolerance windows or nearest-side
-   semantics are needed beyond what the union trick expresses.
-
- - salting (``salt`` > 1, composes with ``union``): hot Zipf keys are split
-   across ``salt`` sub-partitions — build rows replicated to every salt,
-   probe rows hashed to one — bounding the largest sort partition at
-   1/salt of the hot key. Same results, verified in tests.
+   per-row Python).
 """
 
 from __future__ import annotations
 
-import math
+import weakref
 from collections.abc import Sequence
 
 import pandas as pd
@@ -45,6 +50,7 @@ from combinedfeatureextraction_spark.functions.timeutil import epoch_seconds
 
 _TAG = "__cfe_tag"
 _SALT = "__cfe_salt"
+_COGROUP_BUCKETS = 32  # cogroup unit: entity-hash buckets, not raw keys
 
 
 def asof_join(
@@ -58,7 +64,6 @@ def asof_join(
     tolerance_seconds: float | None = None,
     strategy: str = "union",
     salt: int = 1,
-    bucket_count: int = 32,
 ) -> DataFrame:
     """As-of join: probe row → most recent build values with
     build_ts <= probe_ts (or < when allow_exact_matches=False), per key.
@@ -66,18 +71,15 @@ def asof_join(
     Output: all probe columns + one column per entry of ``values`` (NULL
     when no build row qualifies). ``tolerance_seconds`` additionally nulls
     matches older than the tolerance (pd.merge_asof semantics).
+    ``strategy`` is ``union``, ``grid`` or ``cogroup``; ``salt`` applies
+    to ``union`` only.
 
-    STATIC-BUILD CONTRACT (``grid`` / ``broadcast`` strategies): both
-    dim-side plans snapshot build statistics eagerly at plan
-    construction (grid: the whole dim via toPandas; broadcast: the max
-    history depth) while the build plan itself re-evaluates at
-    execution. The build source must therefore not gain rows between
-    constructing and executing the join. Violations fail loudly, never
-    silently: the grid re-validates the pulled row count against its
-    cap (falling back to the shuffle plan), and the broadcast search
-    raises at execution when the snapshot depth proves too shallow.
-    ``union`` and ``cogroup`` take no snapshot and carry no such
-    assumption.
+    STATIC-BUILD CONTRACT (``grid`` strategy): the grid snapshots the
+    whole dim via toPandas at plan construction, so the build source must
+    not gain rows between constructing and executing the join. The
+    bounded pull re-validates the row count against the cap on every
+    construction (falling back to the shuffle plan). ``union`` and
+    ``cogroup`` take no snapshot and carry no such assumption.
     """
     keys = list(keys)
     values = list(values) if values else [
@@ -85,11 +87,6 @@ def asof_join(
     ]
     if strategy == "cogroup":
         return _asof_cogroup(
-            probe, build, keys, probe_ts, build_ts, values,
-            allow_exact_matches, tolerance_seconds, bucket_count,
-        )
-    if strategy == "broadcast":
-        return _asof_broadcast(
             probe, build, keys, probe_ts, build_ts, values,
             allow_exact_matches, tolerance_seconds,
         )
@@ -110,42 +107,14 @@ _GRID_K = 4  # max in-bucket ticks carried as fixed columns
 _GRID_MAX_BUILD = 500_000  # build rows beyond this → fall back to union
 _GRID_MAX_CELLS = 1 << 22  # dense (key × bucket) grid cap (~4M rows)
 _GRID_DENSE_BUDGET = 1 << 17  # cost model: dense cells worth broadcasting
-_BCAST_MAX_BUILD = 2_000_000  # broadcast history rollup cap
 
-# size-guard verdicts keyed by build DataFrame identity: a too-large
-# build side probed by many plan constructions (e.g. a stream restarted,
-# or repeated enrich construction) must not re-pull cap+1 rows per
-# construction. NOTE (ADVICE r05): _fits_grid_cap caches the POSITIVE
-# verdict too — that caching is confined to the pre-check path (one
-# guard job per static dim across repeated enrich constructions) and is
-# safe only because _asof_grid itself re-proves the cap with its bounded
-# limit(cap+1) pull, so a dim-table append between constructions can
-# never ride a stale under-cap answer into the grid build.
-import weakref as _weakref
-
-_GRID_GUARD_CACHE: "_weakref.WeakKeyDictionary[DataFrame, bool]" = (
-    _weakref.WeakKeyDictionary()
-)
-
-
-def _fits_grid_cap(build: DataFrame) -> bool:
-    """Cheap standalone over-cap check (one short-circuiting count job).
-
-    Used by callers that must reject a fat build side BEFORE any plan
-    construction (streaming enrich, where the documented error beats the
-    grid's generic fallback message). ``_asof_grid`` itself no longer
-    pre-counts — it folds the cap check into a bounded ``limit(cap+1)``
-    pull (one driver job instead of two per cold construction).
-    """
-    try:
-        return _GRID_GUARD_CACHE[build]
-    except (KeyError, TypeError):
-        ok = build.limit(_GRID_MAX_BUILD + 1).count() <= _GRID_MAX_BUILD
-        try:
-            _GRID_GUARD_CACHE[build] = ok
-        except TypeError:  # unweakrefable wrapper — just skip the cache
-            pass
-        return ok
+# build DataFrames already proven over the cap: a too-large build side
+# probed by many plan constructions (e.g. a stream restarted, or repeated
+# enrich construction) must not re-pull cap+1 rows per construction.
+# Only the NEGATIVE verdict is cached — an under-cap build is re-proved
+# by every grid pull, so a dim-table append between constructions never
+# rides a stale answer into the grid build.
+_GRID_OVER_CAP: "weakref.WeakSet[DataFrame]" = weakref.WeakSet()
 
 
 def _asof_grid(
@@ -157,7 +126,6 @@ def _asof_grid(
     values: list[str],
     allow_exact_matches: bool,
     tolerance_seconds: float | None,
-    raise_on_fallback: bool = False,
 ) -> DataFrame:
     """Time-grid-indexed broadcast as-of — the fastest small-build path.
 
@@ -177,9 +145,9 @@ def _asof_grid(
 
     def fallback(reason: str) -> DataFrame:
         # a streaming probe cannot run the union plan (stream-batch union
-        # + global window → opaque AnalysisException); callers that need
-        # the grid contract enforced get the documented error instead
-        if raise_on_fallback or probe.isStreaming:
+        # + global window → opaque AnalysisException): it gets the
+        # documented error instead
+        if probe.isStreaming:
             raise ValueError(
                 f"_asof_grid: build side is not grid-indexable ({reason}); "
                 "the union fallback is unavailable here — supply a "
@@ -197,11 +165,8 @@ def _asof_grid(
     # without ever materializing the whole table on the driver, so a
     # misused non-dim build side costs at most cap+1 rows of driver
     # memory before it gets the shuffle plan.
-    try:
-        if _GRID_GUARD_CACHE.get(build) is False:
-            return fallback(f"more than {_GRID_MAX_BUILD} build rows")
-    except TypeError:  # unweakrefable wrapper — no cache, just pull
-        pass
+    if build in _GRID_OVER_CAP:
+        return fallback(f"more than {_GRID_MAX_BUILD} build rows")
     pdf = (
         # epoch seconds computed SPARK-side: pandas datetime64 unit (ns vs
         # µs) would silently shift the grid otherwise
@@ -211,8 +176,8 @@ def _asof_grid(
     )
     if len(pdf) > _GRID_MAX_BUILD:
         try:
-            _GRID_GUARD_CACHE[build] = False
-        except TypeError:
+            _GRID_OVER_CAP.add(build)
+        except TypeError:  # unweakrefable wrapper — no cache
             pass
         return fallback(f"more than {_GRID_MAX_BUILD} build rows")
     pdf = pdf.sort_values("_ts", kind="mergesort")
@@ -260,12 +225,10 @@ def _asof_grid(
     # beyond 2× the tick count AND beyond _GRID_DENSE_BUDGET (≈10 MB of
     # grid slots, the sane-broadcast neighborhood) take the shuffle
     # plan. Only a COST choice, so it never applies where the union
-    # fallback is unavailable (streaming probe / raise_on_fallback —
-    # there the dense grid is the contract and size is governed by the
-    # existing feasibility caps alone).
+    # fallback is unavailable (streaming probe — there the dense grid is
+    # the contract and size is governed by the feasibility caps alone).
     if (
-        not raise_on_fallback
-        and not probe.isStreaming
+        not probe.isStreaming
         and n_keys * n_buckets > max(_GRID_DENSE_BUDGET, 2 * len(pdf))
     ):
         return _asof_union(
@@ -386,143 +349,6 @@ def _asof_grid(
     return out.drop(*drop)
 
 
-def _asof_broadcast(
-    probe: DataFrame,
-    build: DataFrame,
-    keys: list[str],
-    probe_ts: str,
-    build_ts: str,
-    values: list[str],
-    allow_exact_matches: bool,
-    tolerance_seconds: float | None,
-) -> DataFrame:
-    """Broadcast as-of for a SMALL build side with DEEP per-key history.
-
-    The build history is rolled up into one ts-sorted array of structs per
-    key, broadcast-joined to the probe, and each probe row resolves its
-    match with a FIXED-DEPTH BINARY SEARCH over the sorted array —
-    ⌈log₂(max history length + 1)⌉ unrolled iterations of
-    ``try_element_at`` + compare, entirely native/codegen'd. ZERO shuffle
-    of the probe (and of its payload columns), skew-immune (no
-    partitioning by the possibly-Zipf key at all), and ZERO interpreted
-    lambdas: the previous ``F.filter(arr, …)[last]`` resolution was
-    O(history) per probe row AND NamedLambdaVariable-contended — measured
-    96 s vs 2.8 s for the unrolled search on 2M probes × 5k-tick
-    histories (34×). Each iteration maintains (lo, hi) as plain columns
-    in its own projection; Catalyst keeps the per-level aliases (no
-    exponential substitution), and whole-stage codegen evaluates each
-    level once per row.
-
-    WHEN TO PICK IT: the build side fits a broadcast but is too
-    tick-DENSE for the grid index (grid's per-bucket / cell caps trip —
-    grid stays the plan of record for ordinary dim tables: 6.2 s vs
-    union 20.3 s on 23M probes, BASELINE.md).
-
-    Guarded: a build side larger than _BCAST_MAX_BUILD rows falls back to
-    the union (shuffle) plan — collect_list per key over a fat build side
-    is an executor OOM, not an acceptable failure mode.
-    """
-    if build.limit(_BCAST_MAX_BUILD + 1).count() > _BCAST_MAX_BUILD:
-        return _asof_union(
-            probe, build, keys, probe_ts, build_ts, values,
-            allow_exact_matches, tolerance_seconds, salt=1,
-        )
-    hist = build.groupBy(*keys).agg(
-        F.sort_array(
-            F.collect_list(
-                F.struct(
-                    epoch_seconds(build_ts).alias("_bts"),
-                    *[F.col(v).alias(v) for v in values],
-                )
-            )
-        ).alias("_hist")
-    )
-    # search depth from the ACTUAL deepest history (one cheap agg over the
-    # dim-sized build, piggybacking the rollup) — ⌈log₂(500k)⌉ = 19 levels
-    # would be correct but wastes plan depth on shallow histories
-    hmax = hist.agg(F.max(F.size("_hist"))).first()[0] or 1
-    iters = max(1, math.ceil(math.log2(hmax + 1)))
-    joined = probe.join(F.broadcast(hist), keys, "left")
-    pts = epoch_seconds(probe_ts)
-    # invariant: elements 1.._lo all satisfy the predicate, elements
-    # > _hi none do; converges to _lo = count of eligible ticks.
-    # NULL _hist (unmatched probe key): size() is NULL under ANSI → the
-    # active guard stays NULL → _lo stays 0 → NULL match.
-    cur = joined.withColumn("_lo", F.lit(0)).withColumn("_hi", F.size("_hist"))
-    for i in range(iters):
-        mid = F.floor((F.col("_lo") + F.col("_hi") + 1) / 2).cast("int")
-        # clamp: try_element_at treats 0 as INVALID_INDEX_OF_ZERO, not
-        # NULL; mid=0 only reachable when inactive (lo=hi=0), result unused
-        e = F.try_element_at(F.col("_hist"), F.greatest(mid, F.lit(1)))
-        p = (
-            (e["_bts"] <= pts) if allow_exact_matches else (e["_bts"] < pts)
-        )
-        active = F.col("_lo") < F.col("_hi")
-        cur = (
-            cur.select(
-                "*",
-                F.when(active & p, mid).otherwise(F.col("_lo")).alias(f"_lo{i}"),
-                F.when(active & ~p, mid - 1)
-                .otherwise(F.col("_hi"))
-                .alias(f"_hi{i}"),
-            )
-            .drop("_lo", "_hi")
-            .withColumnsRenamed({f"_lo{i}": "_lo", f"_hi{i}": "_hi"})
-        )
-    # convergence clamp: the search depth comes from an EAGER .first()
-    # over the build at plan-construction time, but the broadcast rollup
-    # re-evaluates at execution — if the build source gained rows in
-    # between (static-build contract violated), the unrolled search could
-    # stop with _hi > _lo and silently return a too-early match. Fail
-    # loudly instead: the guard lives INSIDE the match expression (a
-    # standalone guard column would be pruned, see the barrier note
-    # below) and costs one comparison per row.
-    match = F.when(
-        F.col("_hi") > F.col("_lo"),
-        F.raise_error(
-            F.lit(
-                "_asof_broadcast: search depth exhausted before "
-                "convergence — the build side grew between plan "
-                "construction and execution (the build must be static; "
-                "see asof_join docstring)"
-            )
-        ),
-    ).when(
-        F.col("_lo") >= 1,
-        F.try_element_at(F.col("_hist"), F.greatest(F.col("_lo"), F.lit(1))),
-    )
-    if tolerance_seconds is not None:
-        stale = (pts - match["_bts"]) > F.lit(float(tolerance_seconds))
-        match_expr = F.when(match.isNull() | stale, F.lit(None)).otherwise(match)
-    else:
-        match_expr = match
-    # pushdown BARRIER: a caller filter on a value column would otherwise
-    # be pushed through the search chain by alias SUBSTITUTION
-    # (PushPredicateThroughNonJoin.trimAliases) — each level references
-    # (_lo,_hi) several times, so the substituted predicate grows ~4^depth
-    # and OOMs the driver during optimization (observed at 23M probes).
-    # The barrier must live INSIDE the match expression: a standalone
-    # non-deterministic guard column gets removed by ColumnPruning (it is
-    # referenced by nothing), after which the next optimizer-batch
-    # iteration pushes the predicate through the then-deterministic
-    # projection and explodes. spark_partition_id() ≥ 0 is always true,
-    # costs one codegen'd int read per row, is streaming-safe, and makes
-    # the _m projection non-deterministic so PushDownPredicates and
-    # CollapseProject both stop here permanently. NOTE the cost: Spark
-    # only pushes predicates through fully-deterministic projections, so
-    # ALL downstream filters (probe-column ones included) evaluate above
-    # the barrier instead of reaching the scan — filter the PROBE BEFORE
-    # the join (the right pattern for any enrichment join; plan-locked in
-    # tests/test_plans.py).
-    out = cur.select(
-        "*",
-        F.when(F.spark_partition_id() >= 0, match_expr).alias("_m"),
-    )
-    for v in values:
-        out = out.withColumn(v, F.col("_m")[v])
-    return out.drop("_hist", "_m", "_lo", "_hi")
-
-
 def _asof_union(
     probe: DataFrame,
     build: DataFrame,
@@ -544,7 +370,7 @@ def _asof_union(
     # struct with last(ignorenulls) and projecting fields afterwards keeps a
     # matched-but-NULL build value NULL instead of leaking the previous
     # non-NULL value forward (merge_asof row semantics) — per-column fills
-    # diverge from the broadcast/cogroup strategies on NULL build values.
+    # diverge from the grid/cogroup strategies on NULL build values.
     pack_type = T.StructType(
         [T.StructField("_bts", T.DoubleType(), True)]
         + [T.StructField(v, build.schema[v].dataType, True) for v in values]
@@ -631,7 +457,6 @@ def _asof_cogroup(
     values: list[str],
     allow_exact_matches: bool,
     tolerance_seconds: float | None,
-    bucket_count: int,
 ) -> DataFrame:
     """Entity-hash-bucketed cogrouped pandas merge_asof.
 
@@ -642,8 +467,9 @@ def _asof_cogroup(
     vectorized pass.
     """
     bucket = "__cfe_bucket"
-    pb = probe.withColumn(bucket, F.pmod(F.xxhash64(*keys), F.lit(bucket_count)))
-    bb = build.withColumn(bucket, F.pmod(F.xxhash64(*keys), F.lit(bucket_count)))
+    h = F.pmod(F.xxhash64(*keys), F.lit(_COGROUP_BUCKETS))
+    pb = probe.withColumn(bucket, h)
+    bb = build.withColumn(bucket, h)
 
     out_fields = list(probe.schema.fields) + [build.schema[v] for v in values]
     out_schema = T.StructType(

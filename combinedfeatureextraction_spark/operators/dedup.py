@@ -218,18 +218,6 @@ def minhash_signatures_from_sets(
     return mins.select("_id", F.expr(f"array({arr}) AS _sig"))
 
 
-def minhash_signatures(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int = 3,
-    num_hashes: int = 32,
-) -> DataFrame:
-    return minhash_signatures_from_sets(
-        hashed_shingle_sets(df, id_col, text_col, n, persist=False), num_hashes
-    )
-
-
 DEFAULT_MAX_BUCKET = 256
 
 

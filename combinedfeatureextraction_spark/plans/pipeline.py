@@ -14,8 +14,8 @@ Physical shape (deliberate, see .explain in tests and BASELINE.md):
      functions (no interpreted lambda; payload bytes never leave the scan
      operator in narrow mode, and parquet column pruning skips them
      entirely when carry_payload=False and token features are disabled).
-  2. as-of join FIRST, while the row is narrow: broadcast strategy by
-     default (states is a dim table) = ZERO extra shuffle; union strategy
+  2. as-of join FIRST, while the row is narrow: the grid strategy
+     (states is a dim table) = ZERO extra shuffle; its union fallback
      shuffles only the narrow pre-feature row.
   3. ONE hash exchange on doc_id + in-partition sort by ts, then every
      window feature (lags, all rolling horizons, sessionization,
@@ -82,8 +82,6 @@ def rowlevel_features(
     gap_seconds: float = 3600.0,
     roll_ks: Sequence[int] = DEFAULT_ROLL_KS,
     lags: Sequence[int] = DEFAULT_LAGS,
-    asof_salt: int = 1,
-    asof_strategy: str = "grid",
     jumbo_n_tok: int = 4096,
     carry_payload: bool = True,
     token_stats: bool = True,
@@ -129,8 +127,7 @@ def rowlevel_features(
             probe_ts="ts",
             build_ts="effective_ts",
             values=["asof_state_val"],
-            salt=asof_salt,
-            strategy=asof_strategy,
+            strategy="grid",
         )
 
     # 3. single doc_id exchange + ts sort; every window feature pipelines

@@ -1,11 +1,12 @@
 """Streaming point-in-time enrichment + streaming deduplication.
 
 ``streaming_asof_enrich``: the engine's flagship as-of join applied to a
-LIVE probe stream. The grid strategy (operators.asof._asof_grid) compiles
-the static build-side tick history into a broadcast dense time-grid and
-resolves each probe row with a pure projection + broadcast equi-join —
-there is no window, no state store and no watermark requirement, so the
-identical operator runs unchanged as a stateless stream-static join.
+LIVE probe stream. The grid strategy (``asof_join(strategy="grid")``)
+compiles the static build-side tick history into a broadcast dense
+time-grid and resolves each probe row with a pure projection + broadcast
+equi-join — there is no window, no state store and no watermark
+requirement, so the identical operator runs unchanged as a stateless
+stream-static join.
 (The union/cogroup strategies need a global sort/cogroup and have no
 streaming form; a non-dim build side raises rather than silently
 degrading.)
@@ -25,7 +26,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from combinedfeatureextraction_spark.operators import asof as _asof
+from combinedfeatureextraction_spark.operators.asof import asof_join
 
 
 def streaming_asof_enrich(
@@ -45,26 +46,12 @@ def streaming_asof_enrich(
         raise ValueError("streaming_asof_enrich: probe must be a stream")
     if build.isStreaming:
         raise ValueError("streaming_asof_enrich: build side must be static")
-    # the union fallback cannot run on a stream — enforce the dim-table
-    # contract up front with the same guard the grid uses (cached per
-    # build DataFrame: one count job, not one per enrich construction)
-    if not _asof._fits_grid_cap(build):
-        raise ValueError(
-            "streaming_asof_enrich: build side exceeds the broadcast-grid "
-            f"cap ({_asof._GRID_MAX_BUILD} rows); stream-side as-of needs a "
-            "dim-sized history"
-        )
-    keys = list(keys)
-    values = list(values) if values else [
-        c for c in build.columns if c not in set(keys) | {build_ts}
-    ]
-    # raise_on_fallback: the grid has a SECOND fallback (tick density /
-    # cell cap) that would otherwise degrade to the union plan — which on
-    # a streaming probe dies with an unrelated AnalysisException instead
-    # of the documented error
-    return _asof._asof_grid(
+    # on a streaming probe the grid raises the documented ValueError (not
+    # grid-indexable: over the row cap or the tick-density / cell caps)
+    # instead of degrading to the union plan, which has no streaming form
+    return asof_join(
         stream, build, keys, probe_ts, build_ts, values,
-        allow_exact_matches, tolerance_seconds, raise_on_fallback=True,
+        allow_exact_matches, tolerance_seconds, strategy="grid",
     )
 
 

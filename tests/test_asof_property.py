@@ -76,7 +76,6 @@ def test_asof_matches_pandas(spark, case):
     for kwargs in (
         {},
         {"strategy": "grid"},
-        {"strategy": "broadcast"},
         {"salt": 3},
     ):
         got = (

@@ -85,25 +85,31 @@ def test_distance_to_boundary_two_sided(spark):
     assert out == [0.0, 10.0, 30.0, 0.0, 30.0]
 
 
-def test_asof_broadcast_tolerance_and_strict(spark):
-    """The binary-search broadcast resolution must agree with the union
-    plan under tolerance_seconds and allow_exact_matches=False (the
-    paths the strategy-parity test below doesn't vary)."""
+def test_asof_tolerance_and_strict_match_pandas(spark):
+    """Every batch strategy agrees with pd.merge_asof under
+    tolerance_seconds and allow_exact_matches=False (the paths the
+    strategy-parity test below doesn't vary)."""
     from combinedfeatureextraction_spark.operators.asof import asof_join
 
     rng = np.random.default_rng(11)
-    probe = pd.DataFrame(
-        {
-            "k": rng.choice(["x", "y", "z"], 150),
-            "ts": pd.to_datetime(rng.integers(0, 5_000, 150), unit="s"),
-            "pid": np.arange(150),
-        }
-    )
+    # distinct build timestamps (no duplicate-tick ambiguity); 20 probe
+    # rows sit exactly on a build tick so strict matching is exercised
     build = pd.DataFrame(
         {
             "k": rng.choice(["x", "y"], 40),
-            "ts": pd.to_datetime(rng.integers(0, 5_000, 40), unit="s"),
+            "ts": pd.to_datetime(rng.choice(5_000, 40, replace=False), unit="s"),
             "v": rng.normal(size=40),
+        }
+    )
+    on_tick = build.sample(20, random_state=3)
+    probe = pd.DataFrame(
+        {
+            "k": np.concatenate([rng.choice(["x", "y", "z"], 130), on_tick["k"]]),
+            "ts": np.concatenate(
+                [pd.to_datetime(rng.integers(0, 5_000, 130), unit="s"),
+                 on_tick["ts"].values]
+            ),
+            "pid": np.arange(150),
         }
     )
     p, b = spark.createDataFrame(probe), spark.createDataFrame(build)
@@ -112,15 +118,22 @@ def test_asof_broadcast_tolerance_and_strict(spark):
         {"allow_exact_matches": False},
         {"tolerance_seconds": 120.0, "allow_exact_matches": False},
     ):
-        want = (
-            asof_join(p, b, ["k"], "ts", "ts", ["v"], strategy="union", **kw)
-            .orderBy("pid").toPandas()["v"].astype("float64").values
-        )
-        got = (
-            asof_join(p, b, ["k"], "ts", "ts", ["v"], strategy="broadcast", **kw)
-            .orderBy("pid").toPandas()["v"].astype("float64").values
-        )
-        assert np.allclose(got, want, equal_nan=True), kw
+        tol = kw.get("tolerance_seconds")
+        want = pd.merge_asof(
+            probe.sort_values("ts", kind="mergesort"),
+            build.sort_values("ts", kind="mergesort"),
+            on="ts",
+            by="k",
+            direction="backward",
+            allow_exact_matches=kw.get("allow_exact_matches", True),
+            tolerance=pd.Timedelta(seconds=tol) if tol else None,
+        ).sort_values("pid")["v"].values
+        for strategy in ("union", "grid", "cogroup"):
+            got = (
+                asof_join(p, b, ["k"], "ts", "ts", ["v"], strategy=strategy, **kw)
+                .orderBy("pid").toPandas()["v"].astype("float64").values
+            )
+            assert np.allclose(got, want, equal_nan=True), (strategy, kw)
 
 
 def test_asof_strategies_match(spark):
@@ -151,7 +164,6 @@ def test_asof_strategies_match(spark):
     )
     for kwargs in (
         {"strategy": "cogroup"},
-        {"strategy": "broadcast"},
         {"strategy": "grid"},
         {"salt": 5},
         {"salt": 3},
@@ -176,11 +188,10 @@ def test_asof_strategies_match(spark):
 
 def test_asof_guards_fall_back_to_union(spark, monkeypatch):
     """A too-large build side must get the shuffle (union) plan — with a
-    Window/sort — not a driver toPandas / executor collect_list OOM."""
+    Window/sort — not a driver toPandas OOM."""
     from combinedfeatureextraction_spark.operators import asof as asof_mod
 
     monkeypatch.setattr(asof_mod, "_GRID_MAX_BUILD", 5)
-    monkeypatch.setattr(asof_mod, "_BCAST_MAX_BUILD", 5)
     probe = spark.createDataFrame(
         pd.DataFrame({"k": ["a"] * 4, "ts": pd.to_datetime([5, 15, 25, 35], unit="s"),
                       "pid": range(4)})
@@ -189,12 +200,11 @@ def test_asof_guards_fall_back_to_union(spark, monkeypatch):
         pd.DataFrame({"k": ["a"] * 10, "ts": pd.to_datetime(range(0, 100, 10), unit="s"),
                       "v": [float(x) for x in range(10)]})
     )
-    for strat in ("grid", "broadcast"):
-        out = asof_mod.asof_join(probe, build, ["k"], "ts", "ts", ["v"], strategy=strat)
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        assert "Window" in plan, strat  # union plan signature
-        got = {r["pid"]: r["v"] for r in out.collect()}
-        assert got == {0: 0.0, 1: 1.0, 2: 2.0, 3: 3.0}
+    out = asof_mod.asof_join(probe, build, ["k"], "ts", "ts", ["v"], strategy="grid")
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "Window" in plan  # union plan signature
+    got = {r["pid"]: r["v"] for r in out.collect()}
+    assert got == {0: 0.0, 1: 1.0, 2: 2.0, 3: 3.0}
 
 
 def test_asof_grid_dense_build_falls_back(spark):
@@ -220,8 +230,9 @@ def test_asof_rejects_unknown_strategy(spark):
     from combinedfeatureextraction_spark.operators.asof import asof_join
 
     df = spark.createDataFrame([("a", 1)], "k string, ts int")
-    with pytest.raises(ValueError):
-        asof_join(df, df, ["k"], strategy="nope")
+    for strategy in ("nope", "broadcast"):
+        with pytest.raises(ValueError, match="unknown asof strategy"):
+            asof_join(df, df, ["k"], strategy=strategy)
 
 
 def test_last_wins_and_cascade(spark):
@@ -244,27 +255,30 @@ def test_last_wins_and_cascade(spark):
     assert sorted(casc) == ["cold", "hot", "warm"]
 
 
-def test_six_stat_matches_numpy(spark):
+@pytest.mark.parametrize("name", ["x", "a`b"])
+def test_six_stat_matches_numpy(spark, name):
+    """A backtick inside a feature name must survive the SQL-string
+    assembly in both the column reference and the output alias."""
     from combinedfeatureextraction_spark.operators.aggregates import six_stat_agg
 
     rng = np.random.default_rng(3)
     pdf = pd.DataFrame(
-        {"g": rng.choice(["p", "q"], 500), "x": rng.normal(10, 4, 500)}
+        {"g": rng.choice(["p", "q"], 500), name: rng.normal(10, 4, 500)}
     )
     out = (
-        six_stat_agg(spark.createDataFrame(pdf), ["x"], ["g"])
+        six_stat_agg(spark.createDataFrame(pdf), [name], ["g"])
         .orderBy("g")
         .toPandas()
         .set_index("g")
     )
     for g, sub in pdf.groupby("g"):
-        x = sub["x"].values
-        assert np.isclose(out.loc[g, "x_sum"], x.sum())
-        assert np.isclose(out.loc[g, "x_mean"], x.mean())
-        assert np.isclose(out.loc[g, "x_std"], x.std(ddof=0))  # population!
-        assert np.isclose(out.loc[g, "x_median"], np.median(x))
-        assert np.isclose(out.loc[g, "x_min"], x.min())
-        assert np.isclose(out.loc[g, "x_max"], x.max())
+        x = sub[name].values
+        assert np.isclose(out.loc[g, f"{name}_sum"], x.sum())
+        assert np.isclose(out.loc[g, f"{name}_mean"], x.mean())
+        assert np.isclose(out.loc[g, f"{name}_std"], x.std(ddof=0))  # population!
+        assert np.isclose(out.loc[g, f"{name}_median"], np.median(x))
+        assert np.isclose(out.loc[g, f"{name}_min"], x.min())
+        assert np.isclose(out.loc[g, f"{name}_max"], x.max())
 
 
 def test_otsu_matches_numpy_reference(spark):

@@ -90,27 +90,6 @@ def test_zero_temporal_leakage(spark, seqs_df, states_df):
         assert np.allclose(ga, gb, equal_nan=True), col
 
 
-def test_asof_strategies_and_salt_identical(spark, seqs_df, states_df):
-    """broadcast (default) == union == salted union == cogroup."""
-    base = _sorted_pdf(
-        rowlevel_features(seqs_df, states_df), ["asof_state_val"]
-    )
-    for kwargs in (
-        {"asof_strategy": "union"},
-        {"asof_strategy": "union", "asof_salt": 4},
-        {"asof_strategy": "cogroup"},
-        {"asof_strategy": "broadcast"},
-    ):
-        other = _sorted_pdf(
-            rowlevel_features(seqs_df, states_df, **kwargs), ["asof_state_val"]
-        )
-        assert np.allclose(
-            base["asof_state_val"].astype("float64").values,
-            other["asof_state_val"].astype("float64").values,
-            equal_nan=True,
-        ), kwargs
-
-
 def test_generator_parallelism_invariance(spark, seqs_pdf):
     """Distributed generation must be independent of parallelism and equal
     to the local pandas generator (per-doc determinism contract)."""

@@ -118,49 +118,6 @@ def test_rasterize_ops_are_pure_maps(spark):
         assert "MapInPandas" in plan, (op.__name__, plan)
 
 
-def test_asof_broadcast_plan_contract(spark, tmp_path):
-    """The binary-search broadcast as-of: the PROBE never shuffles (the
-    one hash exchange is the dim-side history rollup inside the
-    broadcast subtree), and the documented filter-the-probe-BEFORE-the-
-    join pattern keeps parquet pushdown (the non-determinism barrier
-    blocks ALL post-join pushdown — that is its cost, see the operator
-    docstring)."""
-    import pandas as pd
-
-    from combinedfeatureextraction_spark.operators.asof import asof_join
-
-    probe = pd.DataFrame(
-        {
-            "k": ["a", "b"] * 50,
-            "ts": pd.to_datetime(range(100), unit="s"),
-            "flag": list(range(100)),
-        }
-    )
-    path = str(tmp_path / "probe")
-    spark.createDataFrame(probe).write.mode("overwrite").parquet(path)
-    p = spark.read.parquet(path).filter(F.col("flag") > 10)  # BEFORE join
-    b = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "k": ["a", "b"] * 10,
-                "ts": pd.to_datetime(range(0, 200, 10), unit="s"),
-                "v": [float(x) for x in range(20)],
-            }
-        )
-    )
-    out = asof_join(p, b, ["k"], "ts", "ts", ["v"], strategy="broadcast")
-    plan = _plan(out)
-    assert "BroadcastExchange" in plan, plan
-    # exactly one hash exchange, and it lives in the broadcast (build)
-    # subtree — the probe side pipelines scan → search with no shuffle
-    assert plan.count("Exchange hashpartitioning") == 1, plan
-    assert plan.index("BroadcastExchange") < plan.index(
-        "Exchange hashpartitioning"
-    ), plan
-    scan = next(line for line in plan.splitlines() if "FileScan parquet" in line)
-    assert "GreaterThan(flag,10)" in scan, scan
-
-
 def test_sampling_is_shuffle_free_and_packing_single_exchange(spark):
     """r04 ops keep the 100 TB discipline: deterministic sampling is a
     pure codegen'd filter (zero exchanges of any kind); pack_tokens is

@@ -93,22 +93,6 @@ def test_shoelace_area_square(spark):
     assert abs(out - 12.0) < 1e-9
 
 
-def test_masked_payload_mean(spark):
-    from combinedfeatureextraction_spark.functions.arrays import (
-        masked_payload_mean,
-    )
-
-    pdf = pd.DataFrame({"t": [[1, 2, 3, 100], []]})
-    df = spark.createDataFrame(pdf)
-    out = [
-        r[0]
-        for r in df.select(
-            masked_payload_mean("t", lambda x: x < 10).alias("m")
-        ).collect()
-    ]
-    assert out[0] == 2.0 and out[1] == 0.0
-
-
 def test_lang_id_null_is_und(spark):
     # NULL text: every stopword score is NULL → greatest() is NULL; the
     # chained CASE must short-circuit to 'und', not fall through to the

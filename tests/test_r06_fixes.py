@@ -1,8 +1,8 @@
 """Focused tests for the r06 optimization round's behavior-adjacent
 changes: the ADVICE correctness fixes (non-default id_col in
 masked_color_stats, bounded Huffman LUT cache, truncated-JPEG error
-contract, reserved FLAC sample-rate code, negative-only grid-guard
-cache) and the asof grid's cost-based fallback."""
+contract, reserved FLAC sample-rate code) and the asof grid's
+cost-based fallback."""
 
 from __future__ import annotations
 
@@ -98,20 +98,7 @@ def test_flac_reserved_frame_sample_rate_code_rejected():
         decode_flac(bytes(payload))
 
 
-# ------------------------------------------- asof grid: guard + cost model
-
-def test_fits_grid_cap_positive_is_revalidated_by_grid_pull(spark):
-    """ADVICE r05 (comment fix): the pre-check MAY cache a positive
-    verdict, because _asof_grid re-proves the cap with its bounded
-    pull — a stale under-cap answer can never reach the grid build."""
-    from combinedfeatureextraction_spark.operators import asof as A
-
-    build = spark.range(10).selectExpr(
-        "id AS user_id", "timestamp_seconds(id * 60) AS ts", "id AS v"
-    )
-    assert A._fits_grid_cap(build)
-    assert A._GRID_GUARD_CACHE.get(build) is True  # pre-check-only cache
-
+# ---------------------------------------------------- asof grid: cost model
 
 def test_grid_cost_bailout_matches_grid_results(spark, monkeypatch):
     """When the dense grid would materialize cells far in excess of the
@@ -226,12 +213,13 @@ def test_minhash_expr_string_signatures_bit_identical(spark):
         ).collect()
     )
     # reference pairs recomputed from the reference band rows
+    ref_rows = ref_bands.collect()
     ref_pairs2 = sorted(
         (a, b)
         for (a, band), (b, band2) in [
             ((x["_id"], (x["band"], x["bh"])), (y["_id"], (y["band"], y["bh"])))
-            for x in ref_bands.collect()
-            for y in ref_bands.collect()
+            for x in ref_rows
+            for y in ref_rows
         ]
         if a < b and band == band2
     )
