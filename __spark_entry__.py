@@ -93,9 +93,10 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def _spread(df: DataFrame, *by: str) -> DataFrame:
     """Round-robin a tiny single-file fixture scan across the core
-    budget BEFORE a CPU-heavy mapInPandas rig. The sf fixtures are one
-    parquet file each, so the scan plans as ONE partition and a pure-map
-    payload operator would otherwise run serially on one core (measured:
+    budget BEFORE a CPU-heavy per-row rig (``multimodal.rowmap.
+    per_row_map``). The sf fixtures are one parquet file each, so the
+    scan plans as ONE partition and a pure-map payload operator would
+    otherwise run serially on one core (measured:
     media_decode_jpeg's whole rig on 1 of 8 cores). The exchange moves
     only the id column — trivially cheap next to the per-row payload
     work. Corpus-scale inputs arrive in many partitions and don't need
@@ -637,7 +638,7 @@ def q_streaming_sessions(spark, sf_dir):
 
 def q_media_features(spark, sf_dir):
     """Multimodal plumbing: documents' text bytes as opaque binary payload
-    → mapInPandas decode(fake)+featurize. FULLY ORACLED (round-4): the
+    → per_row_map decode(fake)+featurize. FULLY ORACLED (round-4): the
     fake decoder interprets payload bytes as uint8 samples, and the
     documents corpus is pure ASCII (oracle-probed), so DuckDB recomputes
     the byte-domain stats from per-character codepoints — the Arrow
@@ -657,7 +658,7 @@ def q_media_features(spark, sf_dir):
             F.lit(0).alias("n_frames"), F.lit(0).alias("sample_rate"),
         ).alias("meta"),
     )
-    out = extract_media_features(media, decode="fake")
+    out = extract_media_features(media)
     return out.select(
         "media_id", "byte_len", _r("byte_mean").alias("byte_mean"),
         _r("byte_std").alias("byte_std"),
@@ -1133,7 +1134,7 @@ def q_polygon_features(spark, sf_dir):
 
 def q_polygon_components(spark, sf_dir):
     """W4/W5 upstreamed to 2-D (round-3): rasterize → 2-D connected
-    components → per-component measurement inside ONE mapInPandas
+    components → per-component measurement inside ONE per_row_map
     (FeatureExtractor.py:346-354 split-then-measure shape). ORACLED
     analytically (round-4): odd vec_ids trace TWO disjoint axis-aligned
     rectangles as one even-odd ring (a horizontal retraced bridge joins
@@ -1182,7 +1183,7 @@ def q_polygon_watershed(spark, sf_dir):
     """W5 upstreamed to TRUE 2-D (round-3): rasterize → exact Euclidean
     distance transform (separable Felzenszwalb) → plateau-maxima markers
     → priority-flood watershed → per-object measurement, all inside ONE
-    mapInPandas — the full dual of the reference's touching-object split
+    per_row_map — the full dual of the reference's touching-object split
     (FeatureExtractor.py:346-354: distanceTransform → peak_local_max →
     watershed). Polygons deterministic from vec_id: odd ids get a
     DUMBBELL (two blocks joined by a thin neck — EDT peaks in the block
@@ -1282,7 +1283,7 @@ def q_media_decode(spark, sf_dir):
     are CONSTRUCTED deterministically in Spark — even vec_ids a P6 PPM
     4×3 whose pixel byte j = (v·7+j·13) mod 256, odd ids a 16-bit PCM
     WAV whose sample k = signed16((v·31+k·17) mod 65536) — then decoded
-    through the full mapInPandas path (magic sniff, header parse,
+    through the full per_row_map path (magic sniff, header parse,
     dimension math, little-endian samples). The DuckDB dual recomputes
     the decoded-domain stats from the same arithmetic, so a header
     off-by-one, stride or byte-order bug breaks the hash match. The
@@ -1598,7 +1599,8 @@ def q_polygon_ring(spark, sf_dir):
     minus erode(dilate(mask, disk(r)), disk(r)), then per-component
     area-weighted mean thickness area/(perimeter/2) — the last reference
     feature family without a direct dual (r04 verdict item 3). Both
-    morphology halves are exact-EDT thresholds inside one mapInPandas.
+    morphology halves (disk-offset slice sweeps, equal to exact-EDT
+    thresholds) run inside one per_row_map.
     ORACLED analytically on rectangles: dilating a w×h rectangle by
     disk(r) adds 2r(w+h) side-band cells plus four quarter-disk corners
     Q(r) = Σ_{i=1..r} floor(sqrt(r²−i²)); eroding the dilation by the

@@ -2,9 +2,10 @@
 
 The reference's payload model — a gigapixel raster cropped per element and
 processed as numpy inside the worker (FeatureExtractor.py:290-316) — maps
-to opaque ``binary`` columns with typed metadata structs, processed in
-Arrow batches via ``mapInPandas``. The Spark-side plumbing here (schemas,
-batch shape, partition sizing) is real and tested. The codec layer
+to opaque ``binary`` columns with typed metadata structs, processed per
+row through ``rowmap.per_row_map`` (one Arrow boundary for every
+multimodal operator). The Spark-side plumbing here (schemas, batch
+shape, partition sizing) is real and tested. The codec layer
 decodes natively with zero external deps: binary netpbm (P5/P6),
 RIFF/WAVE PCM (8/16-bit), uncompressed 24-bit BMP (round 3), and —
 round 4 — 8-bit PNG via stdlib zlib inflate + per-scanline unfilter
@@ -17,28 +18,29 @@ fancy 4:2:0 upsampling / YCbCr pixel path pinned to ImageIO within the
 spec tolerance). Dispatch is by
 magic bytes, verified by round-trip tests plus the ``media_decode`` /
 ``media_decode_png`` / ``media_decode_jpeg`` analytic oracles. The
-remaining compressed formats (lossless/arithmetic JPEG, FLAC, MP4, …)
-still raise NotImplementedError at the same seam: those genuinely need
-cv2/PIL/librosa, which are not in this container. ``decode=fake``
-remains for byte-domain tests.
+remaining compressed formats (lossless/arithmetic JPEG, MP4, …) still
+raise NotImplementedError at the same seam: those genuinely need
+cv2/PIL/librosa, which are not in this container (FLAC decodes natively,
+``multimodal.flac``). ``extract_media_features`` keeps a fake
+byte-domain decode for plumbing tests.
 
-Scale notes: binary payloads make rows wide — mapInPandas batches are
-bounded by spark.sql.execution.arrow.maxRecordsPerBatch, and the metadata
-struct lets filters prune (e.g. width>0, media_type='image') BEFORE the
-payload bytes cross the Arrow boundary (column pruning keeps the bytes
-JVM-side for rows the filter drops).
+Scale notes: binary payloads make rows wide — per_row_map's Arrow
+batches are bounded by spark.sql.execution.arrow.maxRecordsPerBatch, and
+the metadata struct lets filters prune (e.g. width>0,
+media_type='image') BEFORE the payload bytes cross the Arrow boundary
+(column pruning keeps the bytes JVM-side for rows the filter drops).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator, Sequence
+from collections.abc import Sequence
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from combinedfeatureextraction_spark.multimodal.rowmap import per_row_map
 
 MEDIA_SCHEMA = T.StructType(
     [
@@ -311,30 +313,35 @@ def encode_png_numpy(arr: np.ndarray, filters: Sequence[int] | None = None) -> b
     )
 
 
-def _decode_real(payload: bytes, media_type: str) -> np.ndarray:
-    """Real codec dispatch by magic bytes — pure numpy/stdlib, no
+def _decode_real(payload: bytes) -> tuple:
+    """The one codec dispatch, by magic bytes — pure numpy/stdlib, no
     external libraries: binary netpbm (P5/P6), RIFF/WAVE PCM,
-    uncompressed 24-bit BMP, and 8-bit PNG (zlib inflate + unfilter).
-    JPEG/FLAC/MP4 still raise at this seam — those genuinely need
-    cv2/PIL/librosa."""
+    uncompressed 24-bit BMP, 8-bit PNG (zlib inflate + unfilter),
+    baseline/progressive JPEG and FLAC. Returns (flat float64 samples,
+    width, height, channels); width/height are None for audio, and an
+    empty payload is (no samples, None, None, None). Lossless/arithmetic
+    JPEG and MP4 raise NotImplementedError at this seam — those
+    genuinely need cv2/PIL/librosa."""
     if not payload:
-        return np.zeros(0)
+        return np.zeros(0), None, None, None
     if payload[:2] in (b"P6", b"P5"):
-        return decode_ppm(payload)[0]
+        return decode_ppm(payload)
     if payload[:4] == b"RIFF":
-        return decode_wav(payload)[0]
+        arr, _, ch = decode_wav(payload)
+        return arr, None, None, ch
     if payload[:2] == b"BM":
-        return decode_bmp(payload)[0]
+        return decode_bmp(payload)
     if payload[:8] == _PNG_SIG:
-        return decode_png(payload)[0]
+        return decode_png(payload)
     if payload[:2] == b"\xff\xd8":
         from combinedfeatureextraction_spark.multimodal.jpeg import decode_jpeg
 
-        return decode_jpeg(payload)[0]
+        return decode_jpeg(payload)
     if payload[:4] == b"fLaC":
         from combinedfeatureextraction_spark.multimodal.flac import decode_flac
 
-        return decode_flac(payload)[0]
+        arr, _, ch = decode_flac(payload)
+        return arr, None, None, ch
     raise NotImplementedError(
         "compressed codec (lossless/arithmetic JPEG, MP4, ...) requires "
         "cv2/PIL/librosa — netpbm/WAV-PCM/BMP/PNG, baseline+progressive "
@@ -342,47 +349,29 @@ def _decode_real(payload: bytes, media_type: str) -> np.ndarray:
     )
 
 
-def _decode_fake(payload: bytes, media_type: str) -> np.ndarray:
-    """Deterministic stand-in: interpret bytes as uint8 'pixels'."""
-    return np.frombuffer(payload or b"\x00", dtype=np.uint8).astype(np.float64)
+_EMBED_DIM = 8
 
 
-def extract_media_features(
-    media: DataFrame,
-    decode: str = "fake",
-    embed_dim: int = 8,
-) -> DataFrame:
-    """Decode → feature-extract per media row, Arrow-batched. Vectorized
-    within batch (numpy over the batch's payloads); zero per-row Python at
-    the Spark level."""
-    decoder = _decode_fake if decode == "fake" else _decode_real
+def _fake_features(payload: bytes | None) -> tuple:
+    """Deterministic byte-domain stand-in for a decode: the payload bytes
+    as uint8 'pixels' (an empty or NULL payload is one zero byte) →
+    (byte_len, byte_mean, byte_std, per-stripe-mean sketch)."""
+    a = np.frombuffer(payload or b"\x00", dtype=np.uint8).astype(np.float64)
+    sketch = np.array(
+        [float(s.mean()) if len(s) else 0.0 for s in np.array_split(a, _EMBED_DIM)],
+        dtype=np.float32,
+    )
+    return len(a), float(a.mean()), float(a.std()), sketch
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            arrs = [decoder(p, t) for p, t in zip(b["payload"], b["media_type"])]
-            out = pd.DataFrame(
-                {
-                    "media_id": b["media_id"].values,
-                    "media_type": b["media_type"].values,
-                    "byte_len": [len(a) for a in arrs],
-                    "byte_mean": [float(a.mean()) for a in arrs],
-                    "byte_std": [float(a.std()) for a in arrs],
-                    "fake_embedding": [
-                        # deterministic byte-derived sketch: per-stripe means
-                        np.array(
-                            [
-                                float(s.mean()) if len(s) else 0.0
-                                for s in np.array_split(a, embed_dim)
-                            ],
-                            dtype=np.float32,
-                        )
-                        for a in arrs
-                    ],
-                }
-            )
-            yield out
 
-    return media.mapInPandas(run, schema=FEATURE_SCHEMA)
+def extract_media_features(media: DataFrame) -> DataFrame:
+    """Fake-decode → feature-extract per media row through
+    ``rowmap.per_row_map``: (media_id, media_type) + byte-domain stats
+    and an ``_EMBED_DIM``-stripe sketch of the raw payload bytes."""
+    return per_row_map(
+        media, ["media_id", "media_type"], ["payload"], _fake_features,
+        FEATURE_SCHEMA.fields[2:],
+    )
 
 
 DECODED_FEATURE_SCHEMA = T.StructType(
@@ -399,76 +388,22 @@ DECODED_FEATURE_SCHEMA = T.StructType(
 )
 
 
+def _decoded_features(payload: bytes | None) -> tuple:
+    arr, w, h, ch = _decode_real(payload)
+    if not len(arr):
+        return 0, None, None, w, h, ch
+    return len(arr), float(arr.mean()), float(arr.std()), w, h, ch
+
+
 def extract_decoded_features(media: DataFrame) -> DataFrame:
-    """REAL-decode path: netpbm/WAV-PCM/BMP payloads → decoded-domain
-    features (pixel/sample stats + decoded dimensions), Arrow-batched in
-    mapInPandas — same plumbing shape as extract_media_features but the
-    values come from the DECODED samples, not the raw bytes, so header
-    parsing, dimension math, row padding and byte order are all on the
-    verified path. Audio rows report n_samples with NULL width/height."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for mid, mtype, payload in zip(
-                b["media_id"], b["media_type"], b["payload"]
-            ):
-                w = h = ch = None
-                if payload[:2] in (b"P6", b"P5"):
-                    arr, w, h, ch = decode_ppm(payload)
-                elif payload[:4] == b"RIFF":
-                    arr, _, ch = decode_wav(payload)
-                elif payload[:2] == b"BM":
-                    arr, w, h, ch = decode_bmp(payload)
-                elif payload[:8] == _PNG_SIG:
-                    arr, w, h, ch = decode_png(payload)
-                elif payload[:2] == b"\xff\xd8":
-                    from combinedfeatureextraction_spark.multimodal.jpeg import (
-                        decode_jpeg,
-                    )
-
-                    arr, w, h, ch = decode_jpeg(payload)
-                elif payload[:4] == b"fLaC":
-                    from combinedfeatureextraction_spark.multimodal.flac import (
-                        decode_flac,
-                    )
-
-                    arr, _, ch = decode_flac(payload)
-                else:
-                    arr = _decode_real(payload, mtype)  # raises: documented seam
-                rows.append(
-                    (
-                        mid,
-                        mtype,
-                        len(arr),
-                        float(arr.mean()) if len(arr) else None,
-                        float(arr.std()) if len(arr) else None,
-                        w,
-                        h,
-                        ch,
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in DECODED_FEATURE_SCHEMA.fields]
-            )
-
-    return media.mapInPandas(run, schema=DECODED_FEATURE_SCHEMA)
-
-
-def frame_sample_plan(media: DataFrame, every_n: int = 10) -> DataFrame:
-    """Frame-sampling plumbing for video rows: expands metadata into the
-    (media_id, frame_idx) work-list WITHOUT touching payload bytes —
-    the decode of selected frames is the stubbed step above."""
-    return (
-        media.filter(F.col("media_type") == "video")
-        .select(
-            "media_id",
-            F.explode(
-                F.sequence(
-                    F.lit(0),
-                    F.greatest(F.col("meta.n_frames") - 1, F.lit(0)),
-                    F.lit(every_n),
-                )
-            ).alias("frame_idx"),
-        )
+    """REAL-decode path: codec payloads → decoded-domain features
+    (pixel/sample stats + decoded dimensions) through
+    ``rowmap.per_row_map`` — same plumbing as extract_media_features but
+    the values come from the DECODED samples, not the raw bytes, so
+    header parsing, dimension math, row padding and byte order are all
+    on the verified path. Audio rows report n_samples with NULL
+    width/height."""
+    return per_row_map(
+        media, ["media_id", "media_type"], ["payload"], _decoded_features,
+        DECODED_FEATURE_SCHEMA.fields[2:],
     )

@@ -11,7 +11,7 @@ in this container, so the transforms are self-contained numpy with the
 CIE constants spelled out; HSV is pinned against the stdlib colorsys
 dual, LAB against published sRGB reference values (tests/test_color.py).
 
-All pixel work is payload-local inside Arrow-batched mapInPandas — the
+All pixel work is payload-local inside one ``rowmap.per_row_map`` — the
 image and its compartment mask arrive as binary columns, masks/arrays
 never become Spark types, and only scalar stats come back (the SURVEY
 §1.1 payload contract). Pure map: no shuffle, parallelism = input
@@ -20,10 +20,7 @@ partitions — the 100 TB shape of every other multimodal operator.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
@@ -34,6 +31,7 @@ from combinedfeatureextraction_spark.multimodal.binary import (
     decode_png,
     decode_ppm,
 )
+from combinedfeatureextraction_spark.multimodal.rowmap import per_row_map
 
 
 def rgb_to_hsv_numpy(rgb: np.ndarray) -> np.ndarray:
@@ -124,18 +122,15 @@ def _decode_image_shaped(payload: bytes) -> np.ndarray:
     return np.asarray(arr, dtype=np.float64).reshape(h, w, ch)
 
 
-COLOR_STATS_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("n_masked", T.LongType(), False),
-        T.StructField("c1_mean", T.DoubleType(), True),
-        T.StructField("c2_mean", T.DoubleType(), True),
-        T.StructField("c3_mean", T.DoubleType(), True),
-        T.StructField("c1_std", T.DoubleType(), True),
-        T.StructField("c2_std", T.DoubleType(), True),
-        T.StructField("c3_std", T.DoubleType(), True),
-    ]
-)
+COLOR_STATS_FIELDS = [
+    T.StructField("n_masked", T.LongType(), False),
+    T.StructField("c1_mean", T.DoubleType(), True),
+    T.StructField("c2_mean", T.DoubleType(), True),
+    T.StructField("c3_mean", T.DoubleType(), True),
+    T.StructField("c1_std", T.DoubleType(), True),
+    T.StructField("c2_std", T.DoubleType(), True),
+    T.StructField("c3_std", T.DoubleType(), True),
+]
 
 _SPACES = ("rgb", "hsv", "lab")
 
@@ -162,47 +157,27 @@ def masked_color_stats(
     the reference's np.nanstd)."""
     if space not in _SPACES:
         raise ValueError(f"space must be one of {_SPACES}")
-    cols = [id_col, payload_col, mask_col]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for mid, payload, mask_payload in zip(
-                b[id_col], b[payload_col], b[mask_col]
-            ):
-                img = _decode_image_shaped(bytes(payload))
-                if img.shape[-1] != 3:
-                    raise ValueError("payload must decode to 3 channels")
-                m = _decode_image_shaped(bytes(mask_payload))
-                if m.shape[-1] != 1:
-                    raise ValueError("mask must decode to 1 channel")
-                sel = m[..., 0] > 0
-                px = img[sel] / 255.0
-                n = int(sel.sum())
-                if n == 0:
-                    rows.append((mid, 0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0))
-                    continue
-                if space == "hsv":
-                    px = rgb_to_hsv_numpy(px)
-                elif space == "lab":
-                    px = rgb_to_lab_numpy(px)
-                mean = np.nanmean(px, axis=0)
-                std = np.nanstd(px, axis=0)
-                rows.append(
-                    (mid, n, *(float(x) for x in mean),
-                     *(float(x) for x in std))
-                )
-            yield pd.DataFrame(
-                rows,
-                # first column must carry the CALLER's id_col name — the
-                # Spark output schema below uses it, and a non-default
-                # id_col would otherwise fail the mapInPandas column match
-                columns=[id_col]
-                + [f.name for f in COLOR_STATS_SCHEMA.fields][1:],
-            )
+    def stats(payload: bytes, mask_payload: bytes) -> tuple:
+        img = _decode_image_shaped(payload)
+        if img.shape[-1] != 3:
+            raise ValueError("payload must decode to 3 channels")
+        m = _decode_image_shaped(mask_payload)
+        if m.shape[-1] != 1:
+            raise ValueError("mask must decode to 1 channel")
+        sel = m[..., 0] > 0
+        px = img[sel] / 255.0
+        n = int(sel.sum())
+        if n == 0:
+            return (0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0)
+        if space == "hsv":
+            px = rgb_to_hsv_numpy(px)
+        elif space == "lab":
+            px = rgb_to_lab_numpy(px)
+        mean = np.nanmean(px, axis=0)
+        std = np.nanstd(px, axis=0)
+        return (n, *(float(x) for x in mean), *(float(x) for x in std))
 
-    out_schema = T.StructType(
-        [T.StructField(id_col, media.schema[id_col].dataType, False)]
-        + list(COLOR_STATS_SCHEMA.fields)[1:]
+    return per_row_map(
+        media, [id_col], [payload_col, mask_col], stats, COLOR_STATS_FIELDS
     )
-    return media.select(*cols).mapInPandas(run, out_schema)

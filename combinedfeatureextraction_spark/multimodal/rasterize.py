@@ -5,22 +5,27 @@ PIL polygon fill (fextract/extractioncodes/FeatureExtractor.py:313,
 extraction_utils/xml_to_mask_minmax.py rasterizer) and the mask feeds
 area / centroid / bbox features. cv2/PIL are not in this container, so
 the fill is a self-contained numpy even-odd scanline rasterizer — the
-same algorithm class fillPoly implements — wrapped in an Arrow-batched
-``mapInPandas``. Geometry never becomes a Spark type: points arrive as
-``array<array<int>>`` columns, masks live and die inside the UDF, and
-only scalar features (area, bbox, centroid) come back — the SURVEY §1.1
-"payload stays Arrow-side" contract.
+same algorithm class fillPoly implements. Every operator here is one
+``rowmap.per_row_map`` over a ``*_features_numpy`` kernel. Geometry never
+becomes a Spark type: points arrive as ``array<array<numeric>>`` columns
+(an (n, 2) numpy view per row), masks live and die inside the kernel,
+and only scalar features (area, bbox, centroid) come back — the SURVEY
+§1.1 "payload stays Arrow-side" contract. Every kernel returns its own
+default tuple for a polygon with fewer than 3 points (NULL and empty
+rows included): ``rasterize_polygon_numpy`` gives an empty mask.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator, Sequence
+from collections.abc import Sequence
 
 import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+
+from combinedfeatureextraction_spark.multimodal.rowmap import per_row_map
 
 
 def rasterize_polygon_numpy(points: np.ndarray) -> tuple[np.ndarray, int, int]:
@@ -109,29 +114,12 @@ def polygon_mask_features(
     id_cols: Sequence[str],
 ) -> DataFrame:
     """id_cols + (mask_area, bbox_w, bbox_h, centroid_x, centroid_y) per
-    polygon row via mapInPandas — one rasterize per row inside the Arrow
-    batch, masks never leave the UDF. Scale: a pure map (no shuffle);
+    polygon row via per_row_map — one rasterize per row inside the Arrow
+    batch, masks never leave the kernel. Scale: a pure map (no shuffle);
     parallelism = input partitions."""
-    id_fields = [df.schema[c] for c in id_cols]
-    schema = T.StructType(list(id_fields) + list(MASK_FEATURES_SCHEMA.fields))
-    cols = list(id_cols) + [points_col]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [
-                mask_features_numpy(np.array([list(p) for p in pts]))
-                if pts is not None and len(pts) >= 3
-                else (0, 0, 0, None, None)
-                for pts in pdf[points_col]
-            ]
-            f = pd.DataFrame(
-                feats,
-                columns=[x.name for x in MASK_FEATURES_SCHEMA.fields],
-                index=pdf.index,
-            )
-            yield pd.concat([pdf[list(id_cols)], f], axis=1)
-
-    return df.select(*cols).mapInPandas(run, schema)
+    return per_row_map(
+        df, id_cols, [points_col], mask_features_numpy, MASK_FEATURES_SCHEMA.fields
+    )
 
 
 # -------------------------------------------------- 2-D components
@@ -261,31 +249,14 @@ def polygon_component_features(
 ) -> DataFrame:
     """id_cols + COMPONENT_FEATURES_SCHEMA per polygon row: rasterize →
     2-D connected components → per-component measurement, all inside ONE
-    mapInPandas (masks and label arrays never leave the UDF). Pure map,
+    per_row_map (masks and label arrays never leave the kernel). Pure map,
     no shuffle; parallelism = input partitions — the 100 TB shape is
     identical to polygon_mask_features."""
-    id_fields = [df.schema[c] for c in id_cols]
-    schema = T.StructType(list(id_fields) + list(COMPONENT_FEATURES_SCHEMA.fields))
-    cols = list(id_cols) + [points_col]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [
-                component_features_numpy(
-                    np.array([list(p) for p in pts]), connectivity
-                )
-                if pts is not None and len(pts) >= 3
-                else (0, 0, 0, None, None, None)
-                for pts in pdf[points_col]
-            ]
-            f = pd.DataFrame(
-                feats,
-                columns=[x.name for x in COMPONENT_FEATURES_SCHEMA.fields],
-                index=pdf.index,
-            )
-            yield pd.concat([pdf[list(id_cols)], f], axis=1)
-
-    return df.select(*cols).mapInPandas(run, schema)
+    return per_row_map(
+        df, id_cols, [points_col],
+        lambda pts: component_features_numpy(pts, connectivity),
+        COMPONENT_FEATURES_SCHEMA.fields,
+    )
 
 
 # -------------------------------------------------- 2-D watershed
@@ -510,28 +481,11 @@ def polygon_watershed_features(
     100 TB shape as polygon_component_features: masks, distance fields,
     and label arrays never leave the Arrow batch, no shuffle, parallelism
     = input partitions."""
-    id_fields = [df.schema[c] for c in id_cols]
-    schema = T.StructType(list(id_fields) + list(WATERSHED_FEATURES_SCHEMA.fields))
-    cols = list(id_cols) + [points_col]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [
-                watershed_features_numpy(
-                    np.array([list(p) for p in pts]), connectivity, rel_peak
-                )
-                if pts is not None and len(pts) >= 3
-                else (0, 0, 0, None, None, None)
-                for pts in pdf[points_col]
-            ]
-            f = pd.DataFrame(
-                feats,
-                columns=[x.name for x in WATERSHED_FEATURES_SCHEMA.fields],
-                index=pdf.index,
-            )
-            yield pd.concat([pdf[list(id_cols)], f], axis=1)
-
-    return df.select(*cols).mapInPandas(run, schema)
+    return per_row_map(
+        df, id_cols, [points_col],
+        lambda pts: watershed_features_numpy(pts, connectivity, rel_peak),
+        WATERSHED_FEATURES_SCHEMA.fields,
+    )
 
 
 # ------------------------------------- 2-D reconstruction / hole fill
@@ -657,28 +611,11 @@ def polygon_hole_features(
     """id_cols + HOLE_FEATURES_SCHEMA per polygon row — same pure-map
     100 TB shape as the other rasterize operators (no shuffle, masks
     in-UDF only)."""
-    id_fields = [df.schema[c] for c in id_cols]
-    schema = T.StructType(list(id_fields) + list(HOLE_FEATURES_SCHEMA.fields))
-    cols = list(id_cols) + [points_col]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [
-                hole_features_numpy(
-                    np.array([list(p) for p in pts]), connectivity
-                )
-                if pts is not None and len(pts) >= 3
-                else (0, 0, 0, 0)
-                for pts in pdf[points_col]
-            ]
-            f = pd.DataFrame(
-                feats,
-                columns=[x.name for x in HOLE_FEATURES_SCHEMA.fields],
-                index=pdf.index,
-            )
-            yield pd.concat([pdf[list(id_cols)], f], axis=1)
-
-    return df.select(*cols).mapInPandas(run, schema)
+    return per_row_map(
+        df, id_cols, [points_col],
+        lambda pts: hole_features_numpy(pts, connectivity),
+        HOLE_FEATURES_SCHEMA.fields,
+    )
 
 
 # -------------------------------------------- EDT composite features
@@ -738,26 +675,11 @@ def polygon_edt_features(
     """id_cols + EDT_FEATURES_SCHEMA per polygon row — pure map, masks
     and distance fields in-UDF only, same 100 TB shape as the other
     rasterize operators."""
-    id_fields = [df.schema[c] for c in id_cols]
-    schema = T.StructType(list(id_fields) + list(EDT_FEATURES_SCHEMA.fields))
-    cols = list(id_cols) + [points_col]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [
-                edt_features_numpy(np.array([list(p) for p in pts]), rel_thresh)
-                if pts is not None and len(pts) >= 3
-                else (0, None, None, 0, None, None)
-                for pts in pdf[points_col]
-            ]
-            f = pd.DataFrame(
-                feats,
-                columns=[x.name for x in EDT_FEATURES_SCHEMA.fields],
-                index=pdf.index,
-            )
-            yield pd.concat([pdf[list(id_cols)], f], axis=1)
-
-    return df.select(*cols).mapInPandas(run, schema)
+    return per_row_map(
+        df, id_cols, [points_col],
+        lambda pts: edt_features_numpy(pts, rel_thresh),
+        EDT_FEATURES_SCHEMA.fields,
+    )
 
 
 # -------------------------------------------------- boundary-ring morphology
@@ -871,27 +793,10 @@ def polygon_ring_features(
 ) -> DataFrame:
     """id_cols + RING_FEATURES_SCHEMA per polygon row (default radius 20
     = the reference's disk(20), process_mc_features.py:83). Pure map via
-    mapInPandas — no shuffle, parallelism = input partitions, the same
+    per_row_map — no shuffle, parallelism = input partitions, the same
     100 TB shape as the other rasterize operators."""
-    id_fields = [df.schema[c] for c in id_cols]
-    schema = T.StructType(list(id_fields) + list(RING_FEATURES_SCHEMA.fields))
-    cols = list(id_cols) + [points_col]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [
-                ring_features_numpy(
-                    np.array([list(p) for p in pts]), radius
-                )
-                if pts is not None and len(pts) >= 3
-                else (0, 0, 0, None)
-                for pts in pdf[points_col]
-            ]
-            f = pd.DataFrame(
-                feats,
-                columns=[x.name for x in RING_FEATURES_SCHEMA.fields],
-                index=pdf.index,
-            )
-            yield pd.concat([pdf[list(id_cols)], f], axis=1)
-
-    return df.select(*cols).mapInPandas(run, schema)
+    return per_row_map(
+        df, id_cols, [points_col],
+        lambda pts: ring_features_numpy(pts, radius),
+        RING_FEATURES_SCHEMA.fields,
+    )

@@ -30,17 +30,16 @@ Two documented simplifications, both exact on the reference's use:
     levels up to the interpolation's bin-center offsets, and exactly
     SQL-expressible, which is what makes the driver oracle closed-form.
 
-All per-pixel work is payload-local in-UDF numpy behind an
-Arrow-batched mapInPandas — same 100 TB pure-map shape as the other
+All per-pixel work is payload-local numpy inside one
+``rowmap.per_row_map`` — same 100 TB pure-map shape as the other
 multimodal operators.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator, Mapping, Sequence
+from collections.abc import Callable, Mapping, Sequence
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
@@ -53,6 +52,7 @@ from combinedfeatureextraction_spark.multimodal.rasterize import (
     distance_transform_numpy,
     label_components_numpy,
 )
+from combinedfeatureextraction_spark.multimodal.rowmap import per_row_map
 
 
 def equalize_hist_masked(u8: np.ndarray, mask: np.ndarray) -> np.ndarray:
@@ -147,6 +147,27 @@ def sub_compartment_masks_numpy(
     return out
 
 
+def _cascade_kernel(
+    op: str,
+    params: Sequence[Mapping],
+    hole_area: int,
+    measure: Callable[[np.ndarray, np.ndarray], tuple],
+) -> Callable[[bytes, bytes], tuple]:
+    """The step the three ``sub_compartment_*`` operators share: check
+    the 3-compartment configuration, then per row decode the image and
+    its boundary mask, run the cascade, and ``measure(image, one-hot
+    masks)``."""
+    if len(params) != 3:
+        raise ValueError(f"{op} expects 3 params")
+
+    def kernel(payload: bytes, mask_payload: bytes) -> tuple:
+        img = _decode_image_shaped(payload)
+        m = _decode_image_shaped(mask_payload)[..., 0] > 0
+        return measure(img, sub_compartment_masks_numpy(img, m, params, hole_area))
+
+    return kernel
+
+
 SUBCOMP_SCHEMA_FIELDS = [
     T.StructField("c1_area", T.LongType(), False),
     T.StructField("c2_area", T.LongType(), False),
@@ -186,55 +207,30 @@ def sub_compartment_features(
     strictly more accurate, and what the closed-form oracle assumes.
     Exactly 3 compartments (the reference's nuclei/eos/luminal
     configuration)."""
-    if len(params) != 3:
-        raise ValueError("sub_compartment_features expects 3 params")
-    cols = [id_col, payload_col, mask_col]
+    def measure(img: np.ndarray, oh: np.ndarray) -> tuple:
+        v_u8 = (
+            255.0 * rgb_to_hsv_numpy(img.astype(np.float64) / 255.0)[..., 2]
+        ).astype(np.uint8)
+        areas, means, dt_sum, dt_mean, dt_max = [], [], [], [], []
+        for c in range(3):
+            sel = oh[..., c]
+            areas.append(int(sel.sum()))
+            means.append(float(v_u8[sel].mean()) if sel.any() else 0.0)
+            if sel.any():
+                d = distance_transform_numpy(sel)[sel]
+                dt_sum.append(float(d.sum()))
+                dt_mean.append(float(d.mean()))
+                dt_max.append(float(d.max()))
+            else:  # reference's empty-compartment 0 convention
+                dt_sum.append(0.0)
+                dt_mean.append(0.0)
+                dt_max.append(0.0)
+        return (*areas, *means, *dt_sum, *dt_mean, *dt_max)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for mid, payload, mpay in zip(
-                b[id_col], b[payload_col], b[mask_col]
-            ):
-                img = _decode_image_shaped(bytes(payload))
-                m = _decode_image_shaped(bytes(mpay))[..., 0] > 0
-                oh = sub_compartment_masks_numpy(img, m, params, hole_area)
-                v_u8 = (
-                    255.0
-                    * rgb_to_hsv_numpy(img.astype(np.float64) / 255.0)[..., 2]
-                ).astype(np.uint8)
-                areas = []
-                means = []
-                dt_sum = []
-                dt_mean = []
-                dt_max = []
-                for c in range(3):
-                    sel = oh[..., c]
-                    areas.append(int(sel.sum()))
-                    means.append(
-                        float(v_u8[sel].mean()) if sel.any() else 0.0
-                    )
-                    if sel.any():
-                        d = distance_transform_numpy(sel)[sel]
-                        dt_sum.append(float(d.sum()))
-                        dt_mean.append(float(d.mean()))
-                        dt_max.append(float(d.max()))
-                    else:  # reference's empty-compartment 0 convention
-                        dt_sum.append(0.0)
-                        dt_mean.append(0.0)
-                        dt_max.append(0.0)
-                rows.append((mid, *areas, *means, *dt_sum, *dt_mean,
-                             *dt_max))
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col] + [f.name for f in SUBCOMP_SCHEMA_FIELDS],
-            )
-
-    schema = T.StructType(
-        [T.StructField(id_col, media.schema[id_col].dataType, False)]
-        + SUBCOMP_SCHEMA_FIELDS
+    kernel = _cascade_kernel("sub_compartment_features", params, hole_area, measure)
+    return per_row_map(
+        media, [id_col], [payload_col, mask_col], kernel, SUBCOMP_SCHEMA_FIELDS
     )
-    return media.select(*cols).mapInPandas(run, schema)
 
 
 def rgb_to_gray_u8(rgb: np.ndarray) -> np.ndarray:
@@ -306,34 +302,17 @@ def sub_compartment_texture(
     distance-1/angle-0 symmetric normed graycomatrix, graycoprops
     contrast/homogeneity/correlation/energy). Same pure-map plumbing as
     sub_compartment_features."""
-    if len(params) != 3:
-        raise ValueError("sub_compartment_texture expects 3 params")
-    cols = [id_col, payload_col, mask_col]
+    def measure(img: np.ndarray, oh: np.ndarray) -> tuple:
+        vals = []
+        for c in range(3):
+            masked = np.where(oh[..., c : c + 1], img, 0.0)
+            vals.extend(glcm_props_numpy(rgb_to_gray_u8(masked)))
+        return tuple(vals)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for mid, payload, mpay in zip(
-                b[id_col], b[payload_col], b[mask_col]
-            ):
-                img = _decode_image_shaped(bytes(payload))
-                m = _decode_image_shaped(bytes(mpay))[..., 0] > 0
-                oh = sub_compartment_masks_numpy(img, m, params, hole_area)
-                vals = []
-                for c in range(3):
-                    masked = np.where(oh[..., c : c + 1], img, 0.0)
-                    vals.extend(glcm_props_numpy(rgb_to_gray_u8(masked)))
-                rows.append((mid, *vals))
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col] + [f.name for f in TEXTURE_SCHEMA_FIELDS],
-            )
-
-    schema = T.StructType(
-        [T.StructField(id_col, media.schema[id_col].dataType, False)]
-        + TEXTURE_SCHEMA_FIELDS
+    kernel = _cascade_kernel("sub_compartment_texture", params, hole_area, measure)
+    return per_row_map(
+        media, [id_col], [payload_col, mask_col], kernel, TEXTURE_SCHEMA_FIELDS
     )
-    return media.select(*cols).mapInPandas(run, schema)
 
 
 def _axis_lengths(rr: np.ndarray, cc: np.ndarray) -> tuple[float, float]:
@@ -391,66 +370,48 @@ def sub_compartment_morphology(
     nanmean/nanstd over nuclei, total-object perimeter (4-edge-count
     convention — documented deviation from regionprops' Freeman
     approximation) and total-object aspect ratio."""
-    if len(params) != 3:
-        raise ValueError("sub_compartment_morphology expects 3 params")
     nuclei_idx = next(
         (i for i, p in enumerate(params)
          if str(p.get("name", "")).lower() == "nuclei"),
         0,
     )
-    cols = [id_col, payload_col, mask_col]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for mid, payload, mpay in zip(
-                b[id_col], b[payload_col], b[mask_col]
-            ):
-                img = _decode_image_shaped(bytes(payload))
-                m = _decode_image_shaped(bytes(mpay))[..., 0] > 0
-                oh = sub_compartment_masks_numpy(img, m, params, hole_area)
-                obj = oh.any(axis=-1)
-                obj_area = int(obj.sum())
-                fracs = [
-                    float(oh[..., c].sum()) / obj_area if obj_area else 0.0
-                    for c in range(3)
-                ]
-                labels, nlab = label_components_numpy(
-                    oh[..., nuclei_idx], connectivity=8
-                )
-                aspects = []
-                for k in range(1, nlab + 1):
-                    rr, cc = np.nonzero(labels == k)
-                    major, minor = _axis_lengths(
-                        rr.astype(np.float64), cc.astype(np.float64)
-                    )
-                    aspects.append(major / minor if minor > 0 else 0.0)
-                n_area = float(oh[..., nuclei_idx].sum())
-                if obj_area:
-                    orr, occ = np.nonzero(obj)
-                    omaj, omin = _axis_lengths(
-                        orr.astype(np.float64), occ.astype(np.float64)
-                    )
-                    obj_aspect = omaj / omin if omin > 0 else 0.0
-                else:
-                    obj_aspect = 0.0
-                rows.append(
-                    (
-                        mid, *fracs, nlab,
-                        n_area / nlab if nlab else 0.0,
-                        float(np.mean(aspects)) if aspects else 0.0,
-                        float(np.std(aspects)) if aspects else 0.0,
-                        _edge_perimeter(obj),
-                        obj_aspect,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col] + [f.name for f in MORPH_SCHEMA_FIELDS],
+    def measure(img: np.ndarray, oh: np.ndarray) -> tuple:
+        obj = oh.any(axis=-1)
+        obj_area = int(obj.sum())
+        fracs = [
+            float(oh[..., c].sum()) / obj_area if obj_area else 0.0
+            for c in range(3)
+        ]
+        labels, nlab = label_components_numpy(
+            oh[..., nuclei_idx], connectivity=8
+        )
+        aspects = []
+        for k in range(1, nlab + 1):
+            rr, cc = np.nonzero(labels == k)
+            major, minor = _axis_lengths(
+                rr.astype(np.float64), cc.astype(np.float64)
             )
+            aspects.append(major / minor if minor > 0 else 0.0)
+        n_area = float(oh[..., nuclei_idx].sum())
+        if obj_area:
+            orr, occ = np.nonzero(obj)
+            omaj, omin = _axis_lengths(
+                orr.astype(np.float64), occ.astype(np.float64)
+            )
+            obj_aspect = omaj / omin if omin > 0 else 0.0
+        else:
+            obj_aspect = 0.0
+        return (
+            *fracs, nlab,
+            n_area / nlab if nlab else 0.0,
+            float(np.mean(aspects)) if aspects else 0.0,
+            float(np.std(aspects)) if aspects else 0.0,
+            _edge_perimeter(obj),
+            obj_aspect,
+        )
 
-    schema = T.StructType(
-        [T.StructField(id_col, media.schema[id_col].dataType, False)]
-        + MORPH_SCHEMA_FIELDS
+    kernel = _cascade_kernel("sub_compartment_morphology", params, hole_area, measure)
+    return per_row_map(
+        media, [id_col], [payload_col, mask_col], kernel, MORPH_SCHEMA_FIELDS
     )
-    return media.select(*cols).mapInPandas(run, schema)

@@ -46,7 +46,6 @@ def test_unmix_matches_numpy(spark):
 def test_media_feature_plumbing(spark):
     from combinedfeatureextraction_spark.multimodal.binary import (
         extract_media_features,
-        frame_sample_plan,
     )
 
     pdf = pd.DataFrame(
@@ -64,14 +63,10 @@ def test_media_feature_plumbing(spark):
     from combinedfeatureextraction_spark.multimodal.binary import MEDIA_SCHEMA
 
     media = spark.createDataFrame(pdf, schema=MEDIA_SCHEMA)
-    feats = extract_media_features(media, decode="fake").orderBy("media_id").toPandas()
+    feats = extract_media_features(media).orderBy("media_id").toPandas()
     assert feats["byte_len"].tolist() == [6, 3, 1]
     assert np.isclose(feats["byte_mean"][0], np.frombuffer(b"abcdef", np.uint8).mean())
     assert all(len(e) == 8 for e in feats["fake_embedding"])
-
-    frames = frame_sample_plan(media, every_n=10).orderBy("media_id", "frame_idx")
-    got = [(r["media_id"], r["frame_idx"]) for r in frames.collect()]
-    assert got == [(2, 0), (2, 10), (2, 20), (3, 0)]
 
 
 def test_media_real_decode_raises(spark):
@@ -80,7 +75,7 @@ def test_media_real_decode_raises(spark):
     from combinedfeatureextraction_spark.multimodal.binary import _decode_real
 
     with pytest.raises(NotImplementedError):
-        _decode_real(b"x", "image")
+        _decode_real(b"x")
 
 
 # ----------------------------------- real codecs (pure numpy, no libs)
@@ -152,7 +147,7 @@ def test_decode_unknown_magic_raises():
     with _pytest.raises(NotImplementedError):
         # MP4 (ftyp box): the remaining codec seam — FLAC decodes
         # natively since r05 (multimodal.flac)
-        _decode_real(b"\x00\x00\x00\x18ftypisom....", "video")
+        _decode_real(b"\x00\x00\x00\x18ftypisom....")
 
 
 def test_decode_png_roundtrip_all_filters_and_channels():

@@ -49,7 +49,7 @@ def test_flac_dispatch_in_decode_real():
     from combinedfeatureextraction_spark.multimodal.binary import _decode_real
 
     x = _plant(16, 2)
-    flat = _decode_real(encode_flac_numpy(x), "audio")
+    flat = _decode_real(encode_flac_numpy(x))[0]
     assert np.array_equal(flat.reshape(-1, 2), x)
 
 

@@ -197,7 +197,7 @@ def test_decode_real_dispatches_jpeg():
 
     q = np.zeros((1, 2, 8, 8), np.int64)
     q[0, 0, 0, 0] = 80  # DC-only: pixels = 80/8 + 128 = 138 in block 0
-    arr = _decode_real(encode_jpeg_gray_numpy(q), "image")
+    arr = _decode_real(encode_jpeg_gray_numpy(q))[0]
     assert len(arr) == 16 * 8
     assert np.allclose(arr.reshape(8, 16)[:, :8], 138.0)
     assert np.allclose(arr.reshape(8, 16)[:, 8:], 128.0)

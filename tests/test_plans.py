@@ -94,28 +94,56 @@ def test_glcm_single_exchange(spark, seqs_df):
 
 
 def test_rasterize_ops_are_pure_maps(spark):
-    """The 2-D morphology operators (components / watershed / holes) must
-    plan as pure maps: mapInPandas over the scan, ZERO exchanges — masks,
-    distance fields and label arrays never ride a shuffle."""
+    """Every multimodal per-row operator (six polygon rasterize ops,
+    masked color stats, three sub-compartment ops, two media feature
+    extractors) must plan as a pure map: exactly ONE MapInArrow over the
+    scan, ZERO exchanges — masks, distance fields, label arrays and
+    decoded pixels never ride a shuffle."""
     import pandas as pd
 
-    from combinedfeatureextraction_spark.multimodal.rasterize import (
-        polygon_component_features,
-        polygon_hole_features,
-        polygon_watershed_features,
+    from combinedfeatureextraction_spark.multimodal import (
+        binary,
+        color,
+        rasterize,
+        subcompartment,
     )
 
-    df = spark.createDataFrame(
+    poly = spark.createDataFrame(
         pd.DataFrame({"pid": [1], "points": [[[0, 0], [8, 0], [8, 6], [0, 6]]]})
     )
+    img = spark.createDataFrame(
+        [(1, b"P6 1 1 255\n\x00\x00\x00", b"P5 1 1 255\n\xff")],
+        "media_id long, payload binary, mask_payload binary",
+    )
+    media = spark.createDataFrame(
+        [(1, "image", b"P5 1 1 255\n\xff", None)], binary.MEDIA_SCHEMA
+    )
+    params = [{"name": "nuclei"}, {"name": "eos"}, {"name": "lumen"}]
+    built = {
+        op.__name__: op(poly, "points", ["pid"])
+        for op in (
+            rasterize.polygon_mask_features,
+            rasterize.polygon_component_features,
+            rasterize.polygon_watershed_features,
+            rasterize.polygon_hole_features,
+            rasterize.polygon_edt_features,
+            rasterize.polygon_ring_features,
+        )
+    }
+    built["masked_color_stats"] = color.masked_color_stats(img)
     for op in (
-        polygon_component_features,
-        polygon_watershed_features,
-        polygon_hole_features,
+        subcompartment.sub_compartment_features,
+        subcompartment.sub_compartment_texture,
+        subcompartment.sub_compartment_morphology,
     ):
-        plan = _plan(op(df, "points", ["pid"]))
-        assert "Exchange" not in plan, (op.__name__, plan)
-        assert "MapInPandas" in plan, (op.__name__, plan)
+        built[op.__name__] = op(img, params)
+    for op in (binary.extract_media_features, binary.extract_decoded_features):
+        built[op.__name__] = op(media)
+    assert len(built) == 12
+    for name, df in built.items():
+        plan = _plan(df)
+        assert "Exchange" not in plan, (name, plan)
+        assert len(re.findall(r"\bMapInArrow\b", plan)) == 1, (name, plan)
 
 
 def test_sampling_is_shuffle_free_and_packing_single_exchange(spark):

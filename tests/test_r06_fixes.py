@@ -24,8 +24,8 @@ def _ppm5(w, h, vals):
 
 def test_masked_color_stats_custom_id_col(spark):
     """ADVICE r05: the pandas output hard-coded the default 'media_id'
-    column name; a caller-supplied id_col must survive the mapInPandas
-    column match."""
+    column name; a caller-supplied id_col must survive into the output
+    schema."""
     from combinedfeatureextraction_spark.multimodal.color import (
         masked_color_stats,
     )

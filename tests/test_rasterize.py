@@ -1,5 +1,5 @@
 """X7 polygon rasterize — golden shapes + shoelace-area consistency +
-Spark mapInPandas plumbing."""
+Spark per_row_map plumbing."""
 
 from __future__ import annotations
 
@@ -129,6 +129,37 @@ def _bfs_components(mask, connectivity=4):
                             q.append((nr, nc))
                 comps.append(frozenset(comp))
     return set(comps)
+
+
+@pytest.mark.parametrize(
+    "op, default",
+    [
+        ("polygon_mask_features", (0, 0, 0, None, None)),
+        ("polygon_component_features", (0, 0, 0, None, None, None)),
+        ("polygon_watershed_features", (0, 0, 0, None, None, None)),
+        ("polygon_hole_features", (0, 0, 0, 0)),
+        ("polygon_edt_features", (0, None, None, 0, None, None)),
+        ("polygon_ring_features", (0, 0, 0, None)),
+    ],
+)
+def test_polygon_ops_degenerate_rows_spark(spark, op, default):
+    """NULL, empty, 2-point and collinear polygon rows each come back as
+    the operator's default tuple (the values the per-site wrappers used
+    to hard-code), with the id passed through."""
+    from combinedfeatureextraction_spark.multimodal import rasterize
+
+    df = spark.createDataFrame(
+        [
+            (1, None),
+            (2, []),
+            (3, [[0, 0], [1, 0]]),
+            (4, [[0, 0], [4, 0], [9, 0]]),  # collinear: zero-height bbox
+        ],
+        "pid long, points array<array<long>>",
+    )
+    rows = sorted(getattr(rasterize, op)(df, "points", ["pid"]).collect())
+    assert [r["pid"] for r in rows] == [1, 2, 3, 4]
+    assert [tuple(r)[1:] for r in rows] == [default] * 4
 
 
 def test_label_components_matches_bfs_oracle():
