@@ -44,7 +44,13 @@ def rasterize_polygon_numpy(points: np.ndarray) -> tuple[np.ndarray, int, int]:
     y_min = int(np.floor(pts[:, 1].min()))
     w = int(np.ceil(pts[:, 0].max())) - x_min
     h = int(np.ceil(pts[:, 1].max())) - y_min
-    if w <= 0 or h <= 0:
+    # zero area: all vertices on one line (a diagonal out-and-back too,
+    # whose coincident crossing pairs would fill the pixel centres they
+    # meet on). Not the signed shoelace sum: a self-crossing bowtie sums
+    # to 0 and still covers pixels.
+    d = pts - pts[0]
+    far = d[np.argmax(np.abs(d).sum(axis=1))]
+    if w <= 0 or h <= 0 or not np.any(d[:, 0] * far[1] - d[:, 1] * far[0]):
         return np.zeros((0, 0), dtype=bool), x_min, y_min
     x0, y0 = pts[:, 0], pts[:, 1]
     x1, y1 = np.roll(x0, -1), np.roll(y0, -1)

@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from combinedfeatureextraction_spark.functions.nansafe import nan_inf_to_zero
+from combinedfeatureextraction_spark.operators.window_features import sql_ident
 
 SIX_STATS = ("sum", "mean", "std", "median", "min", "max")
 
@@ -36,9 +37,7 @@ def _stat_exprs(feature: str, approx: bool) -> list[Column]:
     # every bench rep. `0.0D` / `double('Infinity')` keep literal types
     # identical to F.lit(0.0) / F.lit(float('inf')); duplicated aggregate
     # text dedups in planning exactly like the shared Column subtree did.
-    # An embedded backtick is doubled (SQL identifier quoting).
-    name = feature.replace("`", "``")
-    q = f"`{name}`"
+    q = sql_ident(feature)
     med = f"percentile_approx({q}, 0.5D, 10000)" if approx else f"median({q})"
     pairs = [
         ("sum", f"sum({q})"),
@@ -52,7 +51,7 @@ def _stat_exprs(feature: str, approx: bool) -> list[Column]:
         F.expr(
             f"CASE WHEN {e} IS NULL OR isnan({e})"
             f" OR {e} = double('Infinity') OR {e} = double('-Infinity')"
-            f" THEN 0.0D ELSE {e} END AS `{name}_{s}`"
+            f" THEN 0.0D ELSE {e} END AS {sql_ident(f'{feature}_{s}')}"
         )
         for s, e in pairs
     ]

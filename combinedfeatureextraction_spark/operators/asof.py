@@ -46,7 +46,15 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from combinedfeatureextraction_spark.functions.timeutil import epoch_seconds
+from combinedfeatureextraction_spark.functions.timeutil import (
+    epoch_seconds,
+    epoch_seconds_sql,
+)
+from combinedfeatureextraction_spark.operators.window_features import (
+    double_sql,
+    sql_ident,
+    with_sql_columns,
+)
 
 _TAG = "__cfe_tag"
 _SALT = "__cfe_salt"
@@ -170,7 +178,11 @@ def _asof_grid(
     pdf = (
         # epoch seconds computed SPARK-side: pandas datetime64 unit (ns vs
         # µs) would silently shift the grid otherwise
-        build.select(*keys, epoch_seconds(build_ts).alias("_ts"), *values)
+        build.selectExpr(
+            *map(sql_ident, keys),
+            f"{epoch_seconds_sql(sql_ident(build_ts))} AS `_ts`",
+            *map(sql_ident, values),
+        )
         .limit(_GRID_MAX_BUILD + 1)
         .toPandas()
     )
@@ -305,41 +317,43 @@ def _asof_grid(
         grid_pdf[[f.name for f in fields]], schema=T.StructType(fields)
     )
 
-    pts = epoch_seconds(probe_ts)
-    bucket_expr = F.least(
-        F.greatest(
-            F.floor((pts - F.lit(lo)) / F.lit(delta)).cast("long"), F.lit(b_lo)
-        ),
-        F.lit(b_hi),
+    # the probe-side tail as SQL text: bucket, then ONE projection per
+    # CASE cascade (no per-node Column round trips)
+    pts = epoch_seconds_sql(sql_ident(probe_ts))
+    bucket = (
+        f"least(greatest(CAST(floor(({pts} - {double_sql(lo)})"
+        f" / {double_sql(delta)}) AS BIGINT), {b_lo}), {b_hi})"
     )
-    joined = probe.withColumn("_bucket", bucket_expr).join(
+    joined = with_sql_columns(probe, {"_bucket": bucket}).join(
         F.broadcast(grid), keys + ["_bucket"], "left"
     )
+    op = "<=" if allow_exact_matches else "<"
 
-    def cmp(t):
-        return (t <= pts) if allow_exact_matches else (t < pts)
+    def last_hit(carry: str, slots: list[str]) -> str:
+        # slot i of the last in-bucket tick t_i (op) probe ts, else carry
+        expr = sql_ident(carry)
+        for i, slot in enumerate(slots):
+            t = sql_ident(f"_t{i}")
+            expr = (
+                f"CASE WHEN {t} IS NOT NULL AND {t} {op} {pts}"
+                f" THEN {sql_ident(slot)} ELSE {expr} END"
+            )
+        return expr
 
     # matched tick ts: last eligible in-bucket tick, else carry
-    m_ts = F.col("_carry_ts")
-    for i in range(_GRID_K):
-        ti = F.col(f"_t{i}")
-        m_ts = F.when(ti.isNotNull() & cmp(ti), ti).otherwise(m_ts)
-    out = joined.withColumn("_m_ts", m_ts)
+    tick_cols = [f"_t{i}" for i in range(_GRID_K)]
+    out = with_sql_columns(joined, {"_m_ts": last_hit("_carry_ts", tick_cols)})
     stale = (
-        (pts - F.col("_m_ts")) > F.lit(float(tolerance_seconds))
+        f"({pts} - `_m_ts`) > {double_sql(tolerance_seconds)}"
         if tolerance_seconds is not None
-        else F.lit(False)
+        else "false"
     )
-    for v in values:
-        expr = F.col(f"_carry_{v}")
-        for i in range(_GRID_K):
-            ti = F.col(f"_t{i}")
-            expr = F.when(ti.isNotNull() & cmp(ti), F.col(f"_x{i}_{v}")).otherwise(
-                expr
-            )
-        out = out.withColumn(
-            v, F.when(F.col("_m_ts").isNull() | stale, F.lit(None)).otherwise(expr)
-        )
+    out = with_sql_columns(out, {
+        v: f"CASE WHEN `_m_ts` IS NULL OR {stale} THEN NULL ELSE "
+        + last_hit(f"_carry_{v}", [f"_x{i}_{v}" for i in range(_GRID_K)])
+        + " END"
+        for v in values
+    })
     drop = (
         ["_bucket", "_m_ts", "_carry_ts"]
         + [f"_carry_{v}" for v in values]

@@ -10,19 +10,54 @@ Reference analogs (SURVEY.md W8/W2):
    previous boundary, distance to next boundary) = a forward pass + a
    backward pass of `last(..., ignorenulls)`.
 
-Scale: each direction is one window pass; both passes share the same
-hash-partitioning on the entity key, so Spark plans ONE exchange and two
-in-partition sorts (asc + desc) — no second shuffle.
+Scale: both directions are frames of the same (entity, ts) window, so
+Spark plans ONE exchange, one in-partition sort and one Window operator —
+no second shuffle.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
-from pyspark.sql import functions as F
+from pyspark.sql import Column, DataFrame
 
-from combinedfeatureextraction_spark.functions.timeutil import epoch_seconds
+from combinedfeatureextraction_spark.functions.timeutil import epoch_seconds_sql
+from combinedfeatureextraction_spark.operators.window_features import (
+    ROWS_FROM_CURRENT,
+    ROWS_TO_CURRENT,
+    over_sql,
+    sql_ident,
+    with_sql_columns,
+)
+
+_BOUNDARY = "__cfe_boundary"
+
+
+def forward_fill_sql(value: str, keys: Sequence[str], ts: str) -> str:
+    """Last non-null ``value`` at-or-before the row."""
+    over = over_sql(keys, [ts], ROWS_TO_CURRENT)
+    return f"last({sql_ident(value)}, true) {over}"
+
+
+def backward_fill_sql(value: str, keys: Sequence[str], ts: str) -> str:
+    """First non-null ``value`` at-or-after the row."""
+    over = over_sql(keys, [ts], ROWS_FROM_CURRENT)
+    return f"first({sql_ident(value)}, true) {over}"
+
+
+def distance_to_boundary_sql(
+    boundary: str, keys: Sequence[str], ts: str, two_sided: bool = True
+) -> str:
+    """Seconds to the nearest row where the SQL predicate ``boundary``
+    holds: forward-fill the boundary ts, mirror with a backward fill, take
+    the least non-null."""
+    t = epoch_seconds_sql(sql_ident(ts))
+    b_ts = f"CASE WHEN {boundary} THEN {t} END"
+    d_prev = f"{t} - last({b_ts}, true) {over_sql(keys, [ts], ROWS_TO_CURRENT)}"
+    if not two_sided:
+        return d_prev
+    d_next = f"first({b_ts}, true) {over_sql(keys, [ts], ROWS_FROM_CURRENT)} - {t}"
+    return f"least({d_prev}, {d_next})"
 
 
 def forward_fill(
@@ -33,12 +68,9 @@ def forward_fill(
     out: str | None = None,
 ) -> DataFrame:
     """last non-null value at-or-before each row (W8 backfill operator)."""
-    w = (
-        Window.partitionBy(*keys)
-        .orderBy(ts)
-        .rowsBetween(Window.unboundedPreceding, 0)
+    return with_sql_columns(
+        df, {out or f"{value}_ffill": forward_fill_sql(value, keys, ts)}
     )
-    return df.withColumn(out or f"{value}_ffill", F.last(value, ignorenulls=True).over(w))
 
 
 def backward_fill(
@@ -49,12 +81,9 @@ def backward_fill(
     out: str | None = None,
 ) -> DataFrame:
     """first non-null value at-or-after each row."""
-    w = (
-        Window.partitionBy(*keys)
-        .orderBy(ts)
-        .rowsBetween(0, Window.unboundedFollowing)
+    return with_sql_columns(
+        df, {out or f"{value}_bfill": backward_fill_sql(value, keys, ts)}
     )
-    return df.withColumn(out or f"{value}_bfill", F.first(value, ignorenulls=True).over(w))
 
 
 def distance_to_boundary(
@@ -68,20 +97,11 @@ def distance_to_boundary(
     """Per row: |ts - ts of nearest row where ``boundary`` is true|, in
     seconds (double). NULL when no boundary exists on that side (both sides
     for two_sided). 1-D distance transform (W2): forward-fill the boundary
-    ts, mirror with a backward fill, take the least non-null.
+    ts, mirror with a backward fill, take the least non-null. The
+    ``boundary`` Column is projected once as a hidden column that the SQL
+    text reads.
     """
-    t = epoch_seconds(ts)
-    b_ts = F.when(boundary, t)
-    w_fwd = (
-        Window.partitionBy(*keys).orderBy(ts).rowsBetween(Window.unboundedPreceding, 0)
+    dist = distance_to_boundary_sql(sql_ident(_BOUNDARY), keys, ts, two_sided)
+    return with_sql_columns(df.withColumn(_BOUNDARY, boundary), {out: dist}).drop(
+        _BOUNDARY
     )
-    prev_b = F.last(b_ts, ignorenulls=True).over(w_fwd)
-    d_prev = t - prev_b
-    if not two_sided:
-        return df.withColumn(out, d_prev)
-    w_bwd = (
-        Window.partitionBy(*keys).orderBy(ts).rowsBetween(0, Window.unboundedFollowing)
-    )
-    next_b = F.first(b_ts, ignorenulls=True).over(w_bwd)
-    d_next = next_b - t
-    return df.withColumn(out, F.least(d_prev, d_next))

@@ -19,7 +19,41 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from combinedfeatureextraction_spark.functions.timeutil import epoch_seconds
+from combinedfeatureextraction_spark.functions.timeutil import (
+    epoch_seconds,
+    epoch_seconds_sql,
+)
+from combinedfeatureextraction_spark.operators.window_features import (
+    ROWS_TO_CURRENT,
+    double_sql,
+    over_sql,
+    sql_ident,
+    with_sql_columns,
+)
+
+
+def gap_prev_sql(keys: Sequence[str], ts: str) -> str:
+    """Seconds since the entity's previous row (NULL on its first row)."""
+    t = epoch_seconds_sql(sql_ident(ts))
+    return f"{t} - lag({t}, 1) {over_sql(keys, [ts])}"
+
+
+def session_boundary_sql(gap_prev: str, gap_seconds: float) -> str:
+    """A row opens a session when its gap column is NULL or >= the gap."""
+    g = sql_ident(gap_prev)
+    return f"({g} IS NULL OR {g} >= {double_sql(gap_seconds)})"
+
+
+def session_id_sql(
+    gap_prev: str, keys: Sequence[str], ts: str, gap_seconds: float
+) -> str:
+    """0-based session id: running count of boundaries, from the gap
+    column ``gap_prev`` (a second window pass — it reads a lag)."""
+    boundary = session_boundary_sql(gap_prev, gap_seconds)
+    return (
+        f"CAST(sum(CASE WHEN {boundary} THEN 1 ELSE 0 END)"
+        f" {over_sql(keys, [ts], ROWS_TO_CURRENT)} - 1 AS BIGINT)"
+    )
 
 
 def sessionize(
@@ -29,7 +63,8 @@ def sessionize(
     gap_seconds: float,
     out: str = "session_id",
 ) -> DataFrame:
-    """Assign 0-based session ids per entity.
+    """Assign 0-based session ids per entity; the gap to the previous row
+    is kept as ``_gap_prev``.
 
     A new session starts when ts - lag(ts) >= gap — the half-open interval
     Spark's ``F.session_window`` uses (a session extends to start+gap
@@ -37,17 +72,9 @@ def sessionize(
     (streaming.sessions.streaming_session_agg) agree at exact-gap
     boundaries.
     """
-    w = Window.partitionBy(*keys).orderBy(ts)
-    gap_prev = epoch_seconds(ts) - F.lag(epoch_seconds(ts), 1).over(w)
-    boundary = F.when(
-        gap_prev.isNull() | (gap_prev >= F.lit(float(gap_seconds))), F.lit(1)
-    ).otherwise(F.lit(0))
-    cum = Window.partitionBy(*keys).orderBy(ts).rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    return (
-        df.withColumn("_gap_prev", gap_prev)
-        .withColumn(out, (F.sum(boundary).over(cum) - F.lit(1)).cast("long"))
+    df = with_sql_columns(df, {"_gap_prev": gap_prev_sql(keys, ts)})
+    return with_sql_columns(
+        df, {out: session_id_sql("_gap_prev", keys, ts, gap_seconds)}
     )
 
 

@@ -23,13 +23,84 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window, WindowSpec
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def entity_window(keys: Sequence[str], order: Sequence[str | Column]) -> WindowSpec:
-    return Window.partitionBy(*keys).orderBy(*order)
+# ------------------------------------------------------------ SQL text
+# The ordered-window features are written as SQL text, once each, and
+# every caller applies them in one projection: the public operators below,
+# sessionize/fill, and the fused pass of plans.pipeline.rowlevel_features.
+# A projection of N window expressions is one py4j call instead of the
+# dozens each withColumn/Column-operator call costs, and expressions that
+# share one (PARTITION BY, ORDER BY) land in ONE Window operator.
 
+ROWS_TO_CURRENT = "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW"
+ROWS_FROM_CURRENT = "ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING"
+
+#: rolling stat -> SQL aggregate (``std`` is population std, numpy
+#: ``np.nanstd`` parity, FeatureExtractor.py:592)
+ROLLING_FUNCTIONS = {
+    "mean": "avg",
+    "std": "stddev_pop",
+    "min": "min",
+    "max": "max",
+    "sum": "sum",
+    "count": "count",
+}
+
+
+def sql_ident(name: str) -> str:
+    """Backtick-quoted identifier; an embedded backtick is doubled."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def double_sql(x: float) -> str:
+    """A DOUBLE literal equal to ``float(x)`` (repr round-trips exactly)."""
+    return f"CAST('{float(x)!r}' AS DOUBLE)"
+
+
+def over_sql(keys: Sequence[str], order: Sequence[str], frame: str = "") -> str:
+    """``OVER (PARTITION BY keys ORDER BY order [frame])``."""
+    spec = (
+        f"PARTITION BY {', '.join(map(sql_ident, keys))}"
+        f" ORDER BY {', '.join(map(sql_ident, order))}"
+    )
+    return f"OVER ({spec} {frame})" if frame else f"OVER ({spec})"
+
+
+def rows_frame_sql(preceding: int, following: int) -> str:
+    """The frame ``rowsBetween(-preceding, following)`` as SQL text."""
+    lo = f"{preceding} PRECEDING" if preceding else "CURRENT ROW"
+    hi = f"{following} FOLLOWING" if following else "CURRENT ROW"
+    return f"ROWS BETWEEN {lo} AND {hi}"
+
+
+def lag_lead_sql(value: str, k: int, over: str) -> tuple[str, str]:
+    """(lag, lead) of ``value`` by ``k`` rows over the window ``over``."""
+    v = sql_ident(value)
+    return f"lag({v}, {k}) {over}", f"lead({v}, {k}) {over}"
+
+
+def rolling_sql(stat: str, value: str, over: str) -> str:
+    """One rolling-frame aggregate (a ROLLING_FUNCTIONS key) of ``value``."""
+    return f"{ROLLING_FUNCTIONS[stat]}({sql_ident(value)}) {over}"
+
+
+def with_sql_columns(df: DataFrame, columns: dict[str, str]) -> DataFrame:
+    """``withColumns`` from SQL text in ONE projection: a name already in
+    ``df`` (case-insensitive, like withColumn) is replaced in place, new
+    names are appended in ``columns`` order."""
+    new = {name.lower(): (name, expr) for name, expr in columns.items()}
+    exprs = []
+    for c in df.columns:
+        name, expr = new.pop(c.lower(), (c, None))
+        exprs.append(sql_ident(c) if expr is None else f"{expr} AS {sql_ident(name)}")
+    exprs += [f"{expr} AS {sql_ident(name)}" for name, expr in new.values()]
+    return df.selectExpr(*exprs)
+
+
+# ------------------------------------------------------------ operators
 
 def with_lag_lead(
     df: DataFrame,
@@ -45,11 +116,11 @@ def with_lag_lead(
     `graycomatrix(img, [1], [0])` neighbor pairing (FeatureExtractor.py:510).
     """
     p = prefix or value
-    w = entity_window(keys, order)
+    over = over_sql(keys, order)
+    cols = {}
     for k in offsets:
-        df = df.withColumn(f"{p}_lag_{k}", F.lag(value, k).over(w))
-        df = df.withColumn(f"{p}_lead_{k}", F.lead(value, k).over(w))
-    return df
+        cols[f"{p}_lag_{k}"], cols[f"{p}_lead_{k}"] = lag_lead_sql(value, k, over)
+    return with_sql_columns(df, cols)
 
 
 def with_rolling_stats(
@@ -71,19 +142,10 @@ def with_rolling_stats(
     (FeatureExtractor.py:592).
     """
     p = prefix or value
-    w = entity_window(keys, order).rowsBetween(-preceding, following)
-    c = F.col(value)
-    exprs = {
-        "mean": F.avg(c),
-        "std": F.stddev_pop(c),
-        "min": F.min(c),
-        "max": F.max(c),
-        "sum": F.sum(c),
-        "count": F.count(c),
-    }
-    for s in stats:
-        df = df.withColumn(f"{p}_roll_{s}", exprs[s].over(w))
-    return df
+    over = over_sql(keys, order, rows_frame_sql(preceding, following))
+    return with_sql_columns(
+        df, {f"{p}_roll_{s}": rolling_sql(s, value, over) for s in stats}
+    )
 
 
 def with_rebased_order(

@@ -18,6 +18,14 @@ killed run restarts exactly at the first uncommitted group. At 100 TB the
 group is the unit of incremental progress, and the filter on pending
 buckets prunes completed partitions AT THE SCAN (partition pruning on the
 bucket column) — a resume never rereads finished data.
+
+Counts come from the write itself, not from a second job: ``write_fn``
+commits a snapshot of the table rooted at the run's ``out_dir``
+(``sources.catalog.write_snapshot``), whose manifest records each
+partition's rows from the committed parquet footers; ``rows_in`` /
+``rows_out`` are those footer rows. ``wall_ms`` is the group's wall split
+evenly across its buckets (one job writes them all, so no per-bucket
+wall exists).
 """
 
 from __future__ import annotations
@@ -29,7 +37,10 @@ from pathlib import Path
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from combinedfeatureextraction_spark.sources.catalog import BUCKET_COL
+from combinedfeatureextraction_spark.sources.catalog import (
+    BUCKET_COL,
+    snapshot_partition_stats,
+)
 
 
 class ResumableRun:
@@ -87,23 +98,26 @@ class ResumableRun:
     ) -> dict:
         """Process every pending bucket in ONE Spark job: filter to pending
         (partition-prunes completed buckets), write via ``write_fn(df)``,
-        then commit per-bucket manifests from the observed counts."""
+        then commit per-bucket manifests with the row counts of the
+        snapshot ``write_fn`` returned. That snapshot must belong to the
+        table at ``out_dir`` and be partitioned by ``bucket_col``; without
+        its partition stats the commit raises
+        ``sources.catalog.SnapshotStatsMissing`` instead of recording rows
+        it never saw. A pending bucket absent from the snapshot wrote no
+        rows."""
         pending = self.pending_buckets(all_buckets)
         if not pending:
             return {"processed": 0, "skipped": len(all_buckets)}
         t0 = time.time()
         part = df.filter(F.col(bucket_col).isin(pending))
-        counts = {
-            r[bucket_col]: r["n"]
-            for r in part.groupBy(bucket_col).agg(F.count("*").alias("n")).collect()
-        }
         snapshot_id = write_fn(part)
+        stats = snapshot_partition_stats(self.out_dir, snapshot_id, bucket_col)
         wall = (time.time() - t0) * 1000
         for b in pending:
-            n = int(counts.get(b, 0))
+            n = stats.get(str(b), {}).get("rows", 0)
             self.commit_bucket(
                 b, rows_in=n, rows_out=n,
-                wall_ms=wall / max(len(pending), 1),
+                wall_ms=wall / len(pending),
                 snapshot_id=snapshot_id,
             )
         return {"processed": len(pending), "skipped": len(all_buckets) - len(pending)}

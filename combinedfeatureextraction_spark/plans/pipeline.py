@@ -17,10 +17,16 @@ Physical shape (deliberate, see .explain in tests and BASELINE.md):
   2. as-of join FIRST, while the row is narrow: the grid strategy
      (states is a dim table) = ZERO extra shuffle; its union fallback
      shuffles only the narrow pre-feature row.
-  3. ONE hash exchange on doc_id + in-partition sort by ts, then every
-     window feature (lags, all rolling horizons, sessionization,
-     boundary distance, forward-fill) rides that single sorted pass —
-     ordering the as-of before the windows is what keeps it one exchange.
+  3. ONE hash exchange on doc_id + in-partition sort by ts, then TWO
+     window phases over that one (doc_id ORDER BY ts) window, each a
+     single projection built from SQL text (the operator modules' own
+     feature text, so the public operators and this plan cannot diverge):
+       phase 1 — lags/leads, rolling mean/std/min/max of every horizon
+                 (jumbo-row NULL folded into std), gap_prev;
+       phase 2 — session_id, dist_to_boundary (both read gap_prev, so
+                 they cannot join phase 1) and state_ffill.
+     Each phase is one Window operator; ordering the as-of before the
+     windows is what keeps it one exchange.
 
 Reference parity: the whole ExpandedGranular lifecycle
 (FeatureExtractor.py §3.1 — fetch→filter→per-element features→aggregate→
@@ -33,20 +39,27 @@ from __future__ import annotations
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from combinedfeatureextraction_spark.operators.asof import asof_join
-from combinedfeatureextraction_spark.operators.fill import (
-    distance_to_boundary,
-    forward_fill,
-)
-from combinedfeatureextraction_spark.operators.sessionize import sessionize
-from combinedfeatureextraction_spark.operators.window_features import (
-    with_lag_lead,
-    with_rolling_stats,
-)
 from combinedfeatureextraction_spark.operators.aggregates import (
     six_stat_hierarchy,
+)
+from combinedfeatureextraction_spark.operators.asof import asof_join
+from combinedfeatureextraction_spark.operators.fill import (
+    distance_to_boundary_sql,
+    forward_fill_sql,
+)
+from combinedfeatureextraction_spark.operators.sessionize import (
+    gap_prev_sql,
+    session_boundary_sql,
+    session_id_sql,
+)
+from combinedfeatureextraction_spark.operators.window_features import (
+    lag_lead_sql,
+    over_sql,
+    rolling_sql,
+    rows_frame_sql,
+    sql_ident,
+    with_sql_columns,
 )
 
 DEFAULT_ROLL_KS = (4, 16, 64)
@@ -99,22 +112,22 @@ def rowlevel_features(
     core and markedly better N→4N scaling (payload shuffles are
     memory-bandwidth-bound, not CPU-bound).
     """
-    keys = ["doc_id"]
+    keys, order = ["doc_id"], ["ts"]
     # 1. scan-side token stats (A7) via NATIVE array functions only:
     # interpreted higher-order lambdas (F.aggregate/F.transform) contend
     # across local executor threads — measured INVERSE 8→32 scaling.
-    df = sequences
-    if token_stats:
-        df = df.withColumn(
-            "tok_min", F.array_min("tokens").cast("double")
-        ).withColumn("tok_max", F.array_max("tokens").cast("double"))
-    if not carry_payload:
+    tok = {
+        f"tok_{s}": f"CAST(array_{s}(`tokens`) AS DOUBLE)" for s in ("min", "max")
+    } if token_stats else {}
+    if carry_payload:
+        df = with_sql_columns(sequences, tok)
+    else:
         # with token_stats=False this projection lets parquet column
         # pruning skip the payload bytes entirely (ReadSchema check in
         # tests/test_plans.py)
-        df = df.select(
+        df = sequences.selectExpr(
             "doc_id", "seq_idx", "ts", "n_tok", "source",
-            *(["tok_min", "tok_max"] if token_stats else []),
+            *(f"{e} AS {sql_ident(c)}" for c, e in tok.items()),
         )
 
     # 2. as-of join while the row is still narrow (one wide row per probe
@@ -130,34 +143,37 @@ def rowlevel_features(
             strategy="grid",
         )
 
-    # 3. single doc_id exchange + ts sort; every window feature pipelines
+    # 3. single doc_id exchange + ts sort; both window phases pipeline
     # through that one sorted pass
-    df = with_lag_lead(df, "n_tok", keys, ["ts"], offsets=tuple(lags))
-    for k in roll_ks:
-        df = with_rolling_stats(
-            df, "n_tok", keys, ["ts"], preceding=k, following=0,
-            stats=("mean", "std", "min", "max"), prefix=f"roll{k}",
+    over = over_sql(keys, order)
+    phase1 = {}
+    for k in lags:
+        phase1[f"n_tok_lag_{k}"], phase1[f"n_tok_lead_{k}"] = lag_lead_sql(
+            "n_tok", k, over
         )
-        # rename value-prefixed cols to the horizon-keyed contract
+    for k in roll_ks:
+        over_k = over_sql(keys, order, rows_frame_sql(k, 0))
         for s in ("mean", "std", "min", "max"):
-            df = df.withColumnRenamed(f"roll{k}_roll_{s}", f"roll{k}_{s}")
-    df = sessionize(df, keys, "ts", gap_seconds)
-    df = df.withColumnRenamed("_gap_prev", "gap_prev")
-    # >= : same half-open boundary as sessionize (session_window parity)
-    boundary = F.col("gap_prev").isNull() | (F.col("gap_prev") >= F.lit(gap_seconds))
-    df = distance_to_boundary(df, boundary, keys, "ts")
-    # jumbo-row bailout (F8 skew guard, extract_reference_features.py:447):
-    # heavy derived stats nulled for outlier payloads, row still emitted
-    for k in roll_ks:
-        df = df.withColumn(
-            f"roll{k}_std",
-            F.when(F.col("n_tok") > jumbo_n_tok, F.lit(None)).otherwise(
-                F.col(f"roll{k}_std")
-            ),
+            phase1[f"roll{k}_{s}"] = rolling_sql(s, "n_tok", over_k)
+        # jumbo-row bailout (F8 skew guard, extract_reference_features.py:
+        # 447): heavy derived stats nulled for outlier payloads, row still
+        # emitted
+        phase1[f"roll{k}_std"] = (
+            f"CASE WHEN `n_tok` > {int(jumbo_n_tok)} THEN NULL"
+            f" ELSE {phase1[f'roll{k}_std']} END"
         )
+    phase1["gap_prev"] = gap_prev_sql(keys, "ts")
+    df = with_sql_columns(df, phase1)
+    # phase 2 reads phase 1's gap_prev, so it is the second Window
+    phase2 = {
+        "session_id": session_id_sql("gap_prev", keys, "ts", gap_seconds),
+        "dist_to_boundary": distance_to_boundary_sql(
+            session_boundary_sql("gap_prev", gap_seconds), keys, "ts"
+        ),
+    }
     if states is not None:
-        df = forward_fill(df, "asof_state_val", keys, "ts", out="state_ffill")
-    return df
+        phase2["state_ffill"] = forward_fill_sql("asof_state_val", keys, "ts")
+    return with_sql_columns(df, phase2)
 
 
 def hierarchy_aggregates(features: DataFrame) -> DataFrame:

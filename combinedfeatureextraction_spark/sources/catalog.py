@@ -17,10 +17,19 @@ the bucket granularity this engine checkpoints at.
 
 Layout contract for the sequences table (the 100 TB design): partition by
 hash-bucket of doc_id (co-locates every entity's history → as-of joins and
-windows shuffle at most once) and sort within files by (doc_id, ts) so
-parquet row-group min/max stats prune both the entity and the time axis —
-the engine-level equivalent of the reference's persisted Xmin/Xmax zone
-maps (fextract/extraction_utils/xml_to_mask_minmax.py:233-295).
+windows shuffle at most once) and sort within files by (doc_id, ts) —
+partition columns first, then ``sort_within``, in the one sort the write
+executes. Parquet row-group min/max stats on doc_id prune the entity axis
+(the engine-level equivalent of the reference's persisted Xmin/Xmax zone
+maps, fextract/extraction_utils/xml_to_mask_minmax.py:233-295). The time
+axis is NOT pruned by footer stats: Spark writes ``ts`` as INT96
+(``spark.sql.parquet.outputTimestampType``'s default), a type parquet keeps
+no min/max statistics for, and a per-write option does not change it.
+
+Each snapshot manifest records, per partition it wrote, the ``rows`` /
+``files`` / ``bytes`` of its committed parquet files, rows read from the
+file footers (Iceberg's per-file ``record_count``); resume manifests take
+their row counts from there (``snapshot_partition_stats``).
 """
 
 from __future__ import annotations
@@ -96,31 +105,30 @@ def write_snapshot(
     seq = len(list_snapshots(path))
     snap_id = f"{seq:06d}-{uuid.uuid4().hex[:10]}"
     part_cols = [c for c in partition_by if c in df.columns]
-    out = df
-    if sort_within:
-        out = out.sortWithinPartitions(
-            *[c for c in sort_within if c in df.columns]
-        )
+    # ONE sort, partition columns first: the planned write requires its
+    # partition columns as the leading order and would otherwise replace a
+    # (doc_id, ts)-only sort with its own Sort [bucket]
+    order = [*part_cols, *(c for c in sort_within if c in df.columns)]
+    out = df.sortWithinPartitions(*order) if order else df
     data_dir = path / "data" / f"snap={snap_id}"
     writer = out.write.mode("errorifexists")
     if part_cols:
         writer = writer.partitionBy(*part_cols)
     writer.parquet(str(data_dir))
-    # partitions this snapshot wrote (from the directory layout)
-    if part_cols:
-        written = sorted(
-            p.name.split("=", 1)[1]
-            for p in data_dir.iterdir()
-            if p.is_dir() and "=" in p.name
-        )
-    else:
-        written = []
+    # partitions this snapshot wrote (from the directory layout), with the
+    # row counts of their committed parquet footers
+    stats = dict(sorted(
+        (p.name.split("=", 1)[1], _footer_stats(p))
+        for p in (data_dir.iterdir() if part_cols else ())
+        if p.is_dir() and "=" in p.name
+    ))
     manifest = {
         "snapshot_id": snap_id,
         "parent": parent,
         "mode": mode,
         "partition_by": part_cols,
-        "partitions": written,
+        "partitions": list(stats),
+        "partition_stats": stats,
         "sort_within": list(sort_within),
         "committed_at_ms": int(time.time() * 1000),
         "schema": out.schema.json(),
@@ -131,6 +139,43 @@ def write_snapshot(
     tmp.write_text(snap_id)
     tmp.rename(path / "CURRENT")  # atomic commit
     return snap_id
+
+
+def _footer_stats(part_dir: Path) -> dict:
+    """rows / files / bytes of the parquet files in one partition
+    directory; rows from each file's footer (Iceberg's per-file
+    ``record_count``), read without scanning any data page."""
+    import pyarrow.parquet as pq
+
+    files = list(part_dir.glob("*.parquet"))
+    return {
+        "rows": sum(pq.read_metadata(f).num_rows for f in files),
+        "files": len(files),
+        "bytes": sum(f.stat().st_size for f in files),
+    }
+
+
+class SnapshotStatsMissing(LookupError):
+    """A snapshot manifest with per-partition footer stats was not found."""
+
+
+def snapshot_partition_stats(
+    path: str | Path, snap_id: str, partition_col: str
+) -> dict[str, dict]:
+    """Per-partition ``{"rows", "files", "bytes"}`` that ``write_snapshot``
+    recorded for ``snap_id`` under the table at ``path``, keyed by the
+    value of ``partition_col``. Raises ``SnapshotStatsMissing`` when there
+    is no such manifest, it holds no stats (written before stats were
+    recorded) or the snapshot is not partitioned by exactly
+    ``partition_col`` (its stats could not be keyed by it)."""
+    f = _snapshots_dir(Path(path)) / f"{snap_id}.json"
+    m = json.loads(f.read_text()) if f.exists() else {}
+    if "partition_stats" not in m or m["partition_by"] != [partition_col]:
+        raise SnapshotStatsMissing(
+            f"no {partition_col!r} partition stats for snapshot {snap_id!r}"
+            f" under {path}"
+        )
+    return m["partition_stats"]
 
 
 def _resolve_partition_dirs(path: Path, snap_id: str) -> tuple[list[str], list[str]]:

@@ -35,6 +35,63 @@ def test_rowlevel_allclose(spark, seqs_df, seqs_pdf, states_df, states_pdf):
         assert np.allclose(g, w, equal_nan=True, rtol=1e-9, atol=1e-9), col
 
 
+def test_rowlevel_equals_operator_chain(spark, seqs_df, states_df):
+    """The fused two-phase plan is exactly the chain of public operators
+    (values, NULL/NaN places, column order and schema): both build from
+    the same feature SQL text. A small jumbo threshold exercises the std
+    NULL fold."""
+    import pyspark.sql.functions as F
+
+    from combinedfeatureextraction_spark.operators.asof import asof_join
+    from combinedfeatureextraction_spark.operators.fill import (
+        distance_to_boundary,
+        forward_fill,
+    )
+    from combinedfeatureextraction_spark.operators.sessionize import sessionize
+    from combinedfeatureextraction_spark.operators.window_features import (
+        with_lag_lead,
+        with_rolling_stats,
+    )
+
+    gap, jumbo, keys = 3600.0, 200, ["doc_id"]
+    fused = rowlevel_features(seqs_df, states_df, gap_seconds=gap, jumbo_n_tok=jumbo)
+
+    df = seqs_df.withColumn(
+        "tok_min", F.array_min("tokens").cast("double")
+    ).withColumn("tok_max", F.array_max("tokens").cast("double"))
+    df = asof_join(
+        df, states_df.withColumnRenamed("state_val", "asof_state_val"),
+        keys=["source"], probe_ts="ts", build_ts="effective_ts",
+        values=["asof_state_val"], strategy="grid",
+    )
+    df = with_lag_lead(df, "n_tok", keys, ["ts"], offsets=(1, 2, 3))
+    for k in (4, 16, 64):
+        df = with_rolling_stats(
+            df, "n_tok", keys, ["ts"], preceding=k, following=0,
+            stats=("mean", "std", "min", "max"), prefix=f"roll{k}",
+        )
+        for s in ("mean", "std", "min", "max"):
+            df = df.withColumnRenamed(f"roll{k}_roll_{s}", f"roll{k}_{s}")
+    df = sessionize(df, keys, "ts", gap).withColumnRenamed("_gap_prev", "gap_prev")
+    boundary = F.col("gap_prev").isNull() | (F.col("gap_prev") >= F.lit(gap))
+    df = distance_to_boundary(df, boundary, keys, "ts")
+    for k in (4, 16, 64):
+        df = df.withColumn(
+            f"roll{k}_std",
+            F.when(F.col("n_tok") > jumbo, F.lit(None)).otherwise(F.col(f"roll{k}_std")),
+        )
+    chain = forward_fill(df, "asof_state_val", keys, "ts", out="state_ffill")
+
+    assert fused.schema == chain.schema
+    got, want = (
+        d.withColumn("tokens", F.to_json("tokens")).toPandas()
+        .sort_values(["doc_id", "seq_idx"], kind="mergesort").reset_index(drop=True)
+        for d in (fused, chain)
+    )
+    assert got["roll4_std"].isna().any() and got["roll4_std"].notna().any()
+    pd.testing.assert_frame_equal(got, want, check_exact=True)
+
+
 def test_tokens_byte_equal(spark, seqs_df, seqs_pdf, states_df):
     """The tokens payload must ride through the whole pipeline unmodified
     per row (input_hint invariant)."""

@@ -17,14 +17,17 @@ def _plan(df) -> str:
 def test_pipeline_single_data_exchange(spark, seqs_df, states_df):
     from combinedfeatureextraction_spark.plans.pipeline import rowlevel_features
 
-    df = rowlevel_features(seqs_df, states_df, carry_payload=False)
-    plan = _plan(df)
-    data_exchanges = len(re.findall(r"Exchange hashpartitioning", plan))
-    broadcasts = len(re.findall(r"BroadcastExchange", plan))
-    assert data_exchanges == 1, plan  # ONE shuffle for all window features
-    assert broadcasts == 1  # the as-of grid index
-    # all window operators share the one sort
-    assert len(re.findall(r"\bSort \[", plan)) == 1
+    for carry_payload in (True, False):
+        df = rowlevel_features(seqs_df, states_df, carry_payload=carry_payload)
+        plan = _plan(df)
+        data_exchanges = len(re.findall(r"Exchange hashpartitioning", plan))
+        broadcasts = len(re.findall(r"BroadcastExchange", plan))
+        assert data_exchanges == 1, plan  # ONE shuffle for all window features
+        assert broadcasts == 1  # the as-of grid index
+        # all window operators share the one sort
+        assert len(re.findall(r"\bSort \[", plan)) == 1
+        # two window phases: the second holds what reads phase 1's gap_prev
+        assert len(re.findall(r"\bWindow \[", plan)) == 2, plan
 
 
 def test_narrow_no_token_stats_prunes_payload(spark, tmp_path, seqs_df):

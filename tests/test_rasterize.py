@@ -68,6 +68,22 @@ def test_degenerate_polygons():
     assert mask_features_numpy(np.array([[0, 0], [5, 0], [9, 0]]))[0] == 0
 
 
+def test_zero_area_diagonal_polygon_is_empty():
+    """A diagonal out-and-back polygon has zero area: its crossing pairs
+    meet exactly on pixel centres, which must not be filled. A
+    self-crossing bowtie (signed area 0 too) still covers pixels."""
+    from combinedfeatureextraction_spark.multimodal.rasterize import (
+        mask_features_numpy,
+    )
+
+    empty = (0, 0, 0, None, None)
+    assert mask_features_numpy(np.array([[0, 0], [5, 5], [10, 10]])) == empty
+    assert mask_features_numpy(np.array([[0, 0], [10, 10], [5, 5]])) == empty
+    assert mask_features_numpy(np.array([[3, 1], [3, 1], [3, 1]])) == empty
+    bowtie = mask_features_numpy(np.array([[0, 0], [10, 10], [10, 0], [0, 10]]))
+    assert bowtie[0] > 0
+
+
 def test_polygon_mask_features_spark(spark):
     from combinedfeatureextraction_spark.multimodal.rasterize import (
         polygon_mask_features,
@@ -143,9 +159,10 @@ def _bfs_components(mask, connectivity=4):
     ],
 )
 def test_polygon_ops_degenerate_rows_spark(spark, op, default):
-    """NULL, empty, 2-point and collinear polygon rows each come back as
-    the operator's default tuple (the values the per-site wrappers used
-    to hard-code), with the id passed through."""
+    """NULL, empty, 2-point and collinear (axis-aligned or diagonal)
+    polygon rows each come back as the operator's default tuple (the
+    values the per-site wrappers used to hard-code), with the id passed
+    through."""
     from combinedfeatureextraction_spark.multimodal import rasterize
 
     df = spark.createDataFrame(
@@ -154,12 +171,13 @@ def test_polygon_ops_degenerate_rows_spark(spark, op, default):
             (2, []),
             (3, [[0, 0], [1, 0]]),
             (4, [[0, 0], [4, 0], [9, 0]]),  # collinear: zero-height bbox
+            (5, [[0, 0], [5, 5], [10, 10]]),  # collinear diagonal: zero area
         ],
         "pid long, points array<array<long>>",
     )
     rows = sorted(getattr(rasterize, op)(df, "points", ["pid"]).collect())
-    assert [r["pid"] for r in rows] == [1, 2, 3, 4]
-    assert [tuple(r)[1:] for r in rows] == [default] * 4
+    assert [r["pid"] for r in rows] == [1, 2, 3, 4, 5]
+    assert [tuple(r)[1:] for r in rows] == [default] * 5
 
 
 def test_label_components_matches_bfs_oracle():

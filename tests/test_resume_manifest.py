@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import json
 
+import pytest
 from pyspark.sql import functions as F
 
 from combinedfeatureextraction_spark.plans.manifest import ResumableRun
@@ -13,6 +14,7 @@ from combinedfeatureextraction_spark.sources.catalog import (
     BUCKET_COL,
     current_snapshot_id,
     read_snapshot,
+    snapshot_partition_stats,
     with_bucket,
     write_snapshot,
 )
@@ -56,6 +58,9 @@ def test_resume_skips_completed(spark, seqs_df, tmp_path):
     n_buckets = 8
     df = with_bucket(seqs_df, "doc_id", n_buckets).cache()
     all_buckets = list(range(n_buckets))
+    counts = dict(df.groupBy(BUCKET_COL).count().collect())
+    # the table is rooted at the run's out_dir, where run_pending reads the
+    # committed snapshot's footer counts
     out_dir = tmp_path / "out"
 
     run = ResumableRun(out_dir, "runA")
@@ -65,32 +70,101 @@ def test_resume_skips_completed(spark, seqs_df, tmp_path):
     assert run.completed_buckets() == {0, 1, 2}
     assert run.pending_buckets(all_buckets) == [3, 4, 5, 6, 7]
 
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
     writes = []
 
     def write_fn(part):
-        rows = part.count()
-        writes.append(rows)
-        return write_snapshot(part, out_dir / "tbl", partition_by=(BUCKET_COL,))
+        sc.setJobGroup("resume-write", "write")
+        try:
+            snap = write_snapshot(part, out_dir, partition_by=(BUCKET_COL,))
+        finally:
+            sc.setJobGroup("resume-run", "run_pending")
+        writes.append(snap)
+        return snap
 
-    res = run.run_pending(df, all_buckets, write_fn)
+    sc.setJobGroup("resume-run", "run_pending")
+    try:
+        res = run.run_pending(df, all_buckets, write_fn)
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(prop, None)
     assert res == {"processed": 5, "skipped": 3}
+    # no Spark job besides the write's: the counts come from the footers
+    assert tracker.getJobIdsForGroup("resume-run") == []
+    assert len(tracker.getJobIdsForGroup("resume-write")) >= 1
     # only pending buckets were written
-    expected = df.filter(F.col(BUCKET_COL).isin([3, 4, 5, 6, 7])).count()
-    assert writes == [expected]
+    assert len(writes) == 1
+    written = read_snapshot(spark, out_dir).groupBy(BUCKET_COL).count().collect()
+    assert dict(written) == {b: n for b, n in counts.items() if b >= 3}
 
     # second run: everything committed → no-op, no write
     res2 = run.run_pending(df, all_buckets, write_fn)
     assert res2 == {"processed": 0, "skipped": 8}
     assert len(writes) == 1
 
-    # manifests carry lineage fields
-    rec = json.loads((run.manifest_dir / "bucket=4.json").read_text())
-    assert rec["status"] == "committed"
-    assert rec["rows_in"] >= 0 and "snapshot_id" in rec
+    # manifests carry lineage fields and each bucket's exact row count
+    for b in range(3, n_buckets):
+        rec = json.loads((run.manifest_dir / f"bucket={b}.json").read_text())
+        assert rec["status"] == "committed"
+        assert rec["rows_in"] == rec["rows_out"] == counts.get(b, 0), b
+        assert rec["snapshot_id"] == writes[0]
 
     run.write_run_metrics({"wall_ms": 123.0, "rows": int(df.count())})
     m = json.loads((run.manifest_dir / "run_metrics.json").read_text())
     assert m["run_id"] == "runA"
+
+
+def test_resume_without_snapshot_stats_raises(spark, seqs_df, tmp_path):
+    """A write_fn whose snapshot is not under the run's out_dir, or is not
+    partitioned by the bucket, leaves no counts to commit: a named error,
+    and no bucket is committed."""
+    from combinedfeatureextraction_spark.sources.catalog import (
+        SnapshotStatsMissing,
+    )
+
+    df = with_bucket(seqs_df, "doc_id", 4)
+    out_dir = tmp_path / "out"
+    run = ResumableRun(out_dir, "runB")
+    for write_fn in (
+        lambda part: write_snapshot(part, tmp_path / "elsewhere"),
+        lambda part: write_snapshot(part, out_dir, partition_by=()),
+    ):
+        with pytest.raises(SnapshotStatsMissing):
+            run.run_pending(df, [0, 1, 2, 3], write_fn)
+        assert run.completed_buckets() == set()
+
+
+def test_snapshot_manifest_records_footer_stats(spark, seqs_df, tmp_path):
+    tbl = tmp_path / "tbl_stats"
+    df = with_bucket(seqs_df, "doc_id", 8)
+    snap = write_snapshot(df, tbl, partition_by=(BUCKET_COL,))
+    stats = snapshot_partition_stats(tbl, snap, BUCKET_COL)
+    counts = {str(b): n for b, n in df.groupBy(BUCKET_COL).count().collect()}
+    assert {pv: s["rows"] for pv, s in stats.items()} == counts
+    for pv, s in stats.items():
+        part_dir = tbl / "data" / f"snap={snap}" / f"{BUCKET_COL}={pv}"
+        files = list(part_dir.glob("*.parquet"))
+        assert s["files"] == len(files) >= 1
+        assert s["bytes"] == sum(f.stat().st_size for f in files)
+
+
+def test_write_snapshot_files_sorted_within(spark, seqs_df, tmp_path):
+    """Every written file is ordered by ``sort_within`` even when the input
+    is not: the write's own partition sort must not replace it."""
+    import pyarrow.parquet as pq
+
+    tbl = tmp_path / "tbl_sorted"
+    shuffled = with_bucket(seqs_df, "doc_id", 8).orderBy(F.rand(7)).repartition(3)
+    snap = write_snapshot(
+        shuffled, tbl, partition_by=(BUCKET_COL,), sort_within=("doc_id", "ts")
+    )
+    files = sorted((tbl / "data" / f"snap={snap}").rglob("*.parquet"))
+    assert files
+    for f in files:
+        t = pq.read_table(f, columns=["doc_id", "ts"]).to_pandas()
+        key = list(zip(t["doc_id"], t["ts"]))
+        assert key == sorted(key), f.name
 
 
 def test_expire_snapshots(spark, seqs_df, tmp_path):
