@@ -1347,44 +1347,29 @@ def q_media_decode_png(spark, sf_dir):
     ImageIO (tests/test_deconvolution_multimodal.py), so encoder+decoder
     can't drift together. The per-row encode rig is test-only (500
     rows); production reads real bytes."""
+    import numpy as np
+    from pyspark.sql import types as T
+
     from combinedfeatureextraction_spark.multimodal.binary import (
+        encode_png_numpy,
         extract_decoded_features,
     )
-    from pyspark.sql import types as T
+    from combinedfeatureextraction_spark.multimodal.rowmap import per_row_map
 
     emb = _spread(_t(spark, sf_dir, "embeddings").select("vec_id"))
 
-    def rig(batches):
-        import numpy as np
-        import pandas as pd
+    # the kernel returns the id too: passed through as an id column it
+    # would take the scan's nullable type, not the rig's non-null one
+    def rig(v):
+        h, w, ch = ((6, 4, 1), (4, 3, 3), (3, 3, 4))[v % 3]
+        px = ((v * 7 + np.arange(h * w * ch) * 13) % 256).astype(np.uint8)
+        return v, "image", encode_png_numpy(px.reshape(h, w, ch))
 
-        from combinedfeatureextraction_spark.multimodal.binary import (
-            encode_png_numpy,
-        )
-
-        for pdf in batches:
-            rows = []
-            for v in pdf["vec_id"]:
-                v = int(v)
-                h, w, ch = ((6, 4, 1), (4, 3, 3), (3, 3, 4))[v % 3]
-                px = (
-                    (v * 7 + np.arange(h * w * ch) * 13) % 256
-                ).astype(np.uint8).reshape(h, w, ch)
-                rows.append((v, "image", encode_png_numpy(px)))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "media_type", "payload"]
-            )
-
-    media = emb.mapInPandas(
-        rig,
-        T.StructType(
-            [
-                T.StructField("media_id", T.LongType(), False),
-                T.StructField("media_type", T.StringType(), False),
-                T.StructField("payload", T.BinaryType(), False),
-            ]
-        ),
-    )
+    media = per_row_map(emb, [], ["vec_id"], rig, [
+        T.StructField("media_id", T.LongType(), False),
+        T.StructField("media_type", T.StringType(), False),
+        T.StructField("payload", T.BinaryType(), False),
+    ])
     out = extract_decoded_features(media)
     return out.select(
         "media_id", "n_samples",
@@ -1416,77 +1401,57 @@ def q_media_decode_jpeg(spark, sf_dir):
     spec tolerance in tests/test_jpeg.py (incl. ImageIO-written
     progressive files); n_samples here proves it executes. Ref analog:
     slide-payload decode S2 (FeatureExtractor.py:300)."""
+    import numpy as np
     from pyspark.sql import types as T
 
-    emb = _spread(_t(spark, sf_dir, "embeddings").select("vec_id"))
-
-    def rig(batches):
-        import numpy as np
-        import pandas as pd
-
-        from combinedfeatureextraction_spark.multimodal.jpeg import (
-            _ZIGZAG,
-            decode_jpeg,
-            decode_jpeg_coeffs,
-            encode_jpeg_gray_numpy,
-        )
-
-        for pdf in batches:
-            rows = []
-            ii = np.arange(6)
-            jj = np.arange(1, 10)
-            for v in pdf["vec_id"]:
-                v = int(v)
-                # same arithmetic as the original per-block loop,
-                # vectorized (the rig runs once per corpus row — the
-                # python double loop was the bench query's hot spot
-                # after the decoder itself was table-driven)
-                nat = np.zeros((6, 64), np.int64)
-                nat[:, 0] = 8 * ((v * 7 + ii * 5) % 16)
-                nat[:, _ZIGZAG[jj]] = (
-                    v * 11 + ii[:, None] * 13 + jj[None, :] * 17
-                ) % 7 - 3
-                q = nat.reshape(2, 3, 8, 8)
-                payload = encode_jpeg_gray_numpy(q)
-                grids, meta = decode_jpeg_coeffs(payload)
-                c = grids[0]
-                dc_sum = int(c[:, :, 0, 0].sum())
-                ac_abs = int(np.abs(c).sum() - np.abs(c[:, :, 0, 0]).sum())
-                flat, w, h, ch = decode_jpeg(payload)
-                # the SAME coefficients as a PROGRESSIVE (SOF2) stream:
-                # the multi-scan decode path must reproduce them
-                # bit-identically (gated via the oracled boolean)
-                pgrids, pmeta = decode_jpeg_coeffs(
-                    encode_jpeg_gray_numpy(q, progressive=True)
-                )
-                prog_match = bool(
-                    pmeta["progressive"] and np.array_equal(pgrids[0], c)
-                )
-                rows.append(
-                    (v, meta["width"], meta["height"],
-                     c.shape[0] * c.shape[1], dc_sum, ac_abs, len(flat),
-                     prog_match)
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "width", "height", "n_blocks",
-                         "dc_sum", "ac_abs_sum", "n_samples",
-                         "prog_coeff_match"],
-            )
-
-    return emb.mapInPandas(
-        rig,
-        T.StructType([
-            T.StructField("media_id", T.LongType(), False),
-            T.StructField("width", T.IntegerType(), False),
-            T.StructField("height", T.IntegerType(), False),
-            T.StructField("n_blocks", T.IntegerType(), False),
-            T.StructField("dc_sum", T.LongType(), False),
-            T.StructField("ac_abs_sum", T.LongType(), False),
-            T.StructField("n_samples", T.IntegerType(), False),
-            T.StructField("prog_coeff_match", T.BooleanType(), False),
-        ]),
+    from combinedfeatureextraction_spark.multimodal.jpeg import (
+        _ZIGZAG,
+        decode_jpeg,
+        decode_jpeg_coeffs,
+        encode_jpeg_gray_numpy,
     )
+    from combinedfeatureextraction_spark.multimodal.rowmap import per_row_map
+
+    emb = _spread(_t(spark, sf_dir, "embeddings").select("vec_id"))
+    ii = np.arange(6)
+    jj = np.arange(1, 10)
+
+    def rig(v):
+        # the per-block loop's arithmetic, vectorized (the rig runs once
+        # per corpus row — the python double loop was the bench query's
+        # hot spot after the decoder itself was table-driven)
+        nat = np.zeros((6, 64), np.int64)
+        nat[:, 0] = 8 * ((v * 7 + ii * 5) % 16)
+        nat[:, _ZIGZAG[jj]] = (
+            v * 11 + ii[:, None] * 13 + jj[None, :] * 17
+        ) % 7 - 3
+        q = nat.reshape(2, 3, 8, 8)
+        payload = encode_jpeg_gray_numpy(q)
+        grids, meta = decode_jpeg_coeffs(payload)
+        c = grids[0]
+        dc_sum = int(c[:, :, 0, 0].sum())
+        ac_abs = int(np.abs(c).sum() - np.abs(c[:, :, 0, 0]).sum())
+        flat, w, h, ch = decode_jpeg(payload)
+        # the SAME coefficients as a PROGRESSIVE (SOF2) stream: the
+        # multi-scan decode path must reproduce them bit-identically
+        # (gated via the oracled boolean)
+        pgrids, pmeta = decode_jpeg_coeffs(
+            encode_jpeg_gray_numpy(q, progressive=True)
+        )
+        prog_match = bool(pmeta["progressive"] and np.array_equal(pgrids[0], c))
+        return (v, meta["width"], meta["height"], c.shape[0] * c.shape[1],
+                dc_sum, ac_abs, len(flat), prog_match)
+
+    return per_row_map(emb, [], ["vec_id"], rig, [
+        T.StructField("media_id", T.LongType(), False),
+        T.StructField("width", T.IntegerType(), False),
+        T.StructField("height", T.IntegerType(), False),
+        T.StructField("n_blocks", T.IntegerType(), False),
+        T.StructField("dc_sum", T.LongType(), False),
+        T.StructField("ac_abs_sum", T.LongType(), False),
+        T.StructField("n_samples", T.IntegerType(), False),
+        T.StructField("prog_coeff_match", T.BooleanType(), False),
+    ])
 
 
 def q_polygon_edt(spark, sf_dir):
@@ -1540,51 +1505,35 @@ def q_media_decode_flac(spark, sf_dir):
     subframes, stereo decorrelation and 8/24-bit paths are pinned in
     tests/test_flac.py. The rig is test-only; production reads real
     bytes through the same magic-dispatch (binary._decode_real)."""
+    import numpy as np
     from pyspark.sql import types as T
 
-    emb = _spread(_t(spark, sf_dir, "embeddings").select("vec_id"))
-
-    def rig(batches):
-        import numpy as np
-        import pandas as pd
-
-        from combinedfeatureextraction_spark.multimodal.flac import (
-            decode_flac,
-            encode_flac_numpy,
-        )
-
-        kk = np.arange(24)[:, None]
-        cc = np.arange(2)[None, :]
-        for pdf in batches:
-            rows = []
-            for v in pdf["vec_id"]:
-                v = int(v)
-                x = ((v * 13 + kk * 7 + cc * 3) % 4001) - 2000
-                payload = encode_flac_numpy(
-                    x, sample_rate=8000, subframe="fixed2", rice_param=10
-                )
-                flat, rate, nch = decode_flac(payload)
-                rows.append(
-                    (v, len(flat), float(flat.mean()), float(flat.std()),
-                     rate, nch)
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "n_samples", "sample_mean",
-                         "sample_std", "sample_rate", "channels"],
-            )
-
-    out = emb.mapInPandas(
-        rig,
-        T.StructType([
-            T.StructField("media_id", T.LongType(), False),
-            T.StructField("n_samples", T.IntegerType(), False),
-            T.StructField("sample_mean", T.DoubleType(), False),
-            T.StructField("sample_std", T.DoubleType(), False),
-            T.StructField("sample_rate", T.IntegerType(), False),
-            T.StructField("channels", T.IntegerType(), False),
-        ]),
+    from combinedfeatureextraction_spark.multimodal.flac import (
+        decode_flac,
+        encode_flac_numpy,
     )
+    from combinedfeatureextraction_spark.multimodal.rowmap import per_row_map
+
+    emb = _spread(_t(spark, sf_dir, "embeddings").select("vec_id"))
+    kk = np.arange(24)[:, None]
+    cc = np.arange(2)[None, :]
+
+    def rig(v):
+        x = ((v * 13 + kk * 7 + cc * 3) % 4001) - 2000
+        payload = encode_flac_numpy(
+            x, sample_rate=8000, subframe="fixed2", rice_param=10
+        )
+        flat, rate, nch = decode_flac(payload)
+        return v, len(flat), float(flat.mean()), float(flat.std()), rate, nch
+
+    out = per_row_map(emb, [], ["vec_id"], rig, [
+        T.StructField("media_id", T.LongType(), False),
+        T.StructField("n_samples", T.IntegerType(), False),
+        T.StructField("sample_mean", T.DoubleType(), False),
+        T.StructField("sample_std", T.DoubleType(), False),
+        T.StructField("sample_rate", T.IntegerType(), False),
+        T.StructField("channels", T.IntegerType(), False),
+    ])
     return out.select(
         "media_id", "n_samples",
         _r("sample_mean").alias("sample_mean"),

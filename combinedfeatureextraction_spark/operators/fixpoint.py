@@ -9,11 +9,11 @@ DataFrame loop: each iteration propagates the minimum label across edges,
 every iteration), and the loop stops when no label changed.
 
 Scale notes: each iteration is one shuffle (join on the edge key) over the
-CURRENT labels (narrow: id, label). Convergence for graphs of diameter d
-takes ⌈log₂ d⌉ iterations with large-star/small-star style min-label
-doubling; this implementation is the plain min-propagation variant
-(d iterations) with a ``max_iter`` guard — adequate for the short chains
-sessional data produces, and the place an LSH/large-star upgrade slots in.
+CURRENT labels (narrow: id, label), then one pointer-jumping join
+(component ← label(component)), so a chain of diameter d converges in
+O(log d) rounds rather than d; a ``max_iter`` guard bounds the loop.
+Large-star/small-star (Kiveris et al., SoCC 2014), with its proven
+polylogarithmic round bound, is the upgrade that slots in here.
 """
 
 from __future__ import annotations

@@ -12,6 +12,8 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
+#: the directory that holds this package
+_PKG_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -76,18 +78,26 @@ def get_spark(
         .config("spark.ui.enabled", "false")
     )
     # Shuffle/spill scratch on the fastest local storage (guide §5):
-    # the sandbox's /tmp default is disk-backed while /dev/shm is tmpfs
-    # — scripts/scaling_run.py has used the tmpfs dir since r02, now the
-    # default everywhere. On a cluster this is the NVMe local dir the
-    # platform provisions per executor; CFE_SPARK_LOCAL_DIR overrides,
-    # and the Spark default applies where /dev/shm doesn't exist.
+    # the /dev/shm tmpfs by default, where /tmp may be disk-backed. On a
+    # cluster this is the NVMe local dir the platform provisions per
+    # executor; CFE_SPARK_LOCAL_DIR overrides, and the Spark default
+    # applies where /dev/shm doesn't exist.
     local_dir = os.environ.get("CFE_SPARK_LOCAL_DIR")
     if local_dir is None and os.path.isdir("/dev/shm"):
         local_dir = "/dev/shm/cfe_spark_local"
     if local_dir:
         os.makedirs(local_dir, exist_ok=True)
         b = b.config("spark.local.dir", local_dir)
-    for k, v in (extra_conf or {}).items():
+    # Python workers unpickle the engine's own functions (per_row_map's
+    # batch loop, pandas UDFs), so they must import this package even when
+    # the driver found it through sys.path rather than the cwd or
+    # PYTHONPATH: put the package's parent directory on their path (on a
+    # cluster, where executors get the package through --py-files, a
+    # directory they lack is skipped).
+    conf = dict(extra_conf or {})
+    key = "spark.executorEnv.PYTHONPATH"
+    conf[key] = os.pathsep.join(p for p in (conf.get(key), _PKG_PARENT) if p)
+    for k, v in conf.items():
         b = b.config(k, v)
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
