@@ -11,6 +11,7 @@ these entries ARE the engine's conformance suite.
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -79,15 +80,20 @@ GAP = 172800.0  # session gap (seconds): 2 days — yields multi-event sessions
 #: DATA is still scanned and computed per execution — only the
 #: `StructType` is reused, and the first read of each table still infers
 #: it from the file itself.
+#: Keyed on the path AND its (mtime_ns, size) stat: a file rewritten in
+#: place with another schema must not be read with the stale one (renamed
+#: columns would come back as silent NULLs).
 _SCHEMA_CACHE: dict = {}
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = f"{sf_dir}/{name}.parquet"
-    schema = _SCHEMA_CACHE.get(path)
+    st = os.stat(path)
+    key = (path, st.st_mtime_ns, st.st_size)
+    schema = _SCHEMA_CACHE.get(key)
     if schema is None:
         schema = spark.read.parquet(path).schema
-        _SCHEMA_CACHE[path] = schema
+        _SCHEMA_CACHE[key] = schema
     return spark.read.schema(schema).parquet(path)
 
 
@@ -212,10 +218,13 @@ def q_asof_join_salted(spark, sf_dir):
 
 
 def q_asof_join_cogroup(spark, sf_dir):
+    """Runs the default (union) as-of plan, the same as ``asof_join``.
+    The grouped-pandas ``cogroup`` strategy it was named after lost to
+    the union plan at every measured scale and was deleted; the query
+    keeps its name because bench.py lists it."""
     return asof_join(
         _purchases(spark, sf_dir), _errors(spark, sf_dir),
         keys=["user_id"], probe_ts="ts", build_ts="ts", values=["err_value"],
-        strategy="cogroup",
     ).select("event_id", "user_id", "ts", "value", "err_value")
 
 
@@ -1912,24 +1921,19 @@ def q_top_ngram(spark, sf_dir):
 def q_watershed_split(spark, sf_dir):
     """W5 (complete): 1-D watershed — sessions split at value-valleys
     between value-peaks (FeatureExtractor.py:346-354 marker-watershed
-    analog), Arrow-batched applyInPandas per entity bucket. FULLY ORACLED
-    (round-4): the peak/plateau/valley cascade is order-dependent but
-    SQL-expressible — peaks are rows that rise on the left (or start)
-    whose NEXT nonzero value change is a drop (IGNORE-NULLS forward
-    first_value over the step signs, the exact dual of the numpy
-    backward-filled next-direction scan), the valley between consecutive
-    peaks is the first argmin strictly between them (rows sharing the
-    same prev-peak/next-peak pair form the interval), and the subsession
-    id counts valleys strictly before the row. Independent numpy-oracle
-    parity stays in tests/test_watershed.py."""
+    analog), window SQL only. FULLY ORACLED (round-4): the
+    peak/plateau/valley cascade is order-dependent but SQL-expressible —
+    peaks are rows that rise on the left (or start) whose NEXT nonzero
+    value change is a drop (IGNORE-NULLS forward first_value over the
+    step signs), the valley between consecutive peaks is the first argmin
+    strictly between them (rows sharing the same prev-peak/next-peak
+    pair form the interval), and the subsession id counts valleys
+    strictly before the row. Independent-oracle parity stays in
+    tests/test_watershed.py."""
     from combinedfeatureextraction_spark.operators.watershed import (
         watershed_split,
     )
 
-    # project BEFORE the operator: applyInPandas is opaque to column
-    # pruning (guide §4.1), so every input column — including the fat
-    # `props` json string no output needs — would otherwise ride the
-    # session exchange AND the Arrow boundary both ways.
     ev = _t(spark, sf_dir, "events").select("user_id", "ts", "event_id", "value")
     s = sessionize(ev, ["user_id"], "ts", GAP)
     out = watershed_split(
@@ -2816,9 +2820,10 @@ LEFT JOIN (SELECT * FROM t WHERE rn = 1) t ON d.doc_id = t.doc_id
         # watershed_split: exact SQL dual of the 1-D marker watershed.
         # Peaks: rows rising on the left (or session start) whose NEXT
         # nonzero step sign is a drop (IGNORE-NULLS forward first_value
-        # = the numpy backward-filled next-direction). Rows sharing the
+        # over the step signs). Rows sharing the
         # same (prev peak, next peak) pair form the inter-peak interval;
-        # the valley is its first argmin (ORDER BY value, rn); the
+        # the valley is its first argmin (ORDER BY value ASC NULLS LAST,
+        # rn: DuckDB's default spelled out, Spark's is NULLS FIRST); the
         # subsession id counts valleys strictly before the row.
         "watershed_split": f"""
 WITH s AS ({_SESSION_ID_SQL}),
@@ -2854,7 +2859,8 @@ vl AS (
   SELECT *,
     CASE WHEN a IS NOT NULL AND b IS NOT NULL THEN
       row_number() OVER
-        (PARTITION BY user_id, session_id, a, b ORDER BY value, rn)
+        (PARTITION BY user_id, session_id, a, b
+         ORDER BY value ASC NULLS LAST, rn)
     END AS vrank
   FROM ab
 )
@@ -3575,13 +3581,10 @@ reach(id, comp) AS (
 )
 SELECT id, min(comp) AS component FROM reach GROUP BY id
 """,
-        # lsh_topk / ivf_topk / media_features / watershed_split /
-        # polygon_components / polygon_watershed / approx_stats /
-        # corpus_curation: intentionally no oracle (LSH randomness /
-        # kmeans / stubbed codec / in-UDF rasterize-EDT-flood / peak-
-        # valley scan are not single-statement ANSI SQL) → driver
-        # rows-only check. minhash_dedup, simhash_dedup AND
-        # dedup_clusters ARE oracled (exact-Jaccard dual; md5-portable
+        # lsh_topk / approx_stats: intentionally no oracle (LSH
+        # randomness / engine-specific sketches) → driver rows-only
+        # check. minhash_dedup, simhash_dedup AND dedup_clusters ARE
+        # oracled (exact-Jaccard dual; md5-portable
         # signatures + pigeonhole-complete recall; recursive-CTE
         # closure).
     }

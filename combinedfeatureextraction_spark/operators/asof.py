@@ -9,7 +9,7 @@ same key. Zero temporal leakage by construction: no build row with
 ``ts > probe.ts`` can ever influence the output (verified by
 tests/test_pipeline_golden.py::test_zero_temporal_leakage).
 
-Three physical strategies, one logical semantics:
+Two physical strategies, one logical semantics:
 
  - ``union`` (default): tag build rows 0 / probe rows 1, UNION ALL, then
    ``last(value, ignorenulls=True)`` over a window partitioned by key and
@@ -28,10 +28,6 @@ Three physical strategies, one logical semantics:
    ``union`` when the build side is too large, too dense or too sparse
    for the index; the only strategy with a streaming form
    (streaming.enrich).
-
- - ``cogroup``: entity-hash-bucketed ``groupBy().cogroup().applyInPandas``
-   running ``pandas.merge_asof`` per bucket (Arrow-vectorized, zero
-   per-row Python).
 """
 
 from __future__ import annotations
@@ -58,7 +54,6 @@ from combinedfeatureextraction_spark.operators.window_features import (
 
 _TAG = "__cfe_tag"
 _SALT = "__cfe_salt"
-_COGROUP_BUCKETS = 32  # cogroup unit: entity-hash buckets, not raw keys
 
 
 def asof_join(
@@ -79,25 +74,20 @@ def asof_join(
     Output: all probe columns + one column per entry of ``values`` (NULL
     when no build row qualifies). ``tolerance_seconds`` additionally nulls
     matches older than the tolerance (pd.merge_asof semantics).
-    ``strategy`` is ``union``, ``grid`` or ``cogroup``; ``salt`` applies
-    to ``union`` only.
+    ``strategy`` is ``union`` or ``grid``; ``salt`` applies to ``union``
+    only.
 
     STATIC-BUILD CONTRACT (``grid`` strategy): the grid snapshots the
     whole dim via toPandas at plan construction, so the build source must
     not gain rows between constructing and executing the join. The
     bounded pull re-validates the row count against the cap on every
-    construction (falling back to the shuffle plan). ``union`` and
-    ``cogroup`` take no snapshot and carry no such assumption.
+    construction (falling back to the shuffle plan). ``union`` takes no
+    snapshot and carries no such assumption.
     """
     keys = list(keys)
     values = list(values) if values else [
         c for c in build.columns if c not in set(keys) | {build_ts}
     ]
-    if strategy == "cogroup":
-        return _asof_cogroup(
-            probe, build, keys, probe_ts, build_ts, values,
-            allow_exact_matches, tolerance_seconds,
-        )
     if strategy == "grid":
         return _asof_grid(
             probe, build, keys, probe_ts, build_ts, values,
@@ -384,7 +374,7 @@ def _asof_union(
     # struct with last(ignorenulls) and projecting fields afterwards keeps a
     # matched-but-NULL build value NULL instead of leaking the previous
     # non-NULL value forward (merge_asof row semantics) — per-column fills
-    # diverge from the grid/cogroup strategies on NULL build values.
+    # diverge from the grid strategy and pd.merge_asof on NULL build values.
     pack_type = T.StructType(
         [T.StructField("_bts", T.DoubleType(), True)]
         + [T.StructField(v, build.schema[v].dataType, True) for v in values]
@@ -459,72 +449,4 @@ def _asof_union(
         out = out.withColumn(v, m[v])
     return out.select(
         *keys, F.col(ts_col).alias(probe_ts), *payload, *values
-    )
-
-
-def _asof_cogroup(
-    probe: DataFrame,
-    build: DataFrame,
-    keys: list[str],
-    probe_ts: str,
-    build_ts: str,
-    values: list[str],
-    allow_exact_matches: bool,
-    tolerance_seconds: float | None,
-) -> DataFrame:
-    """Entity-hash-bucketed cogrouped pandas merge_asof.
-
-    Buckets (not raw keys) are the cogroup unit so a high-cardinality key
-    space doesn't create millions of tiny Arrow batches; inside a bucket
-    ``pd.merge_asof(by=keys)`` handles the per-key matching. This is the
-    SURVEY §7.6 pattern: entity-range buckets, ts-sorted, merged in one
-    vectorized pass.
-    """
-    bucket = "__cfe_bucket"
-    h = F.pmod(F.xxhash64(*keys), F.lit(_COGROUP_BUCKETS))
-    pb = probe.withColumn(bucket, h)
-    bb = build.withColumn(bucket, h)
-
-    out_fields = list(probe.schema.fields) + [build.schema[v] for v in values]
-    out_schema = T.StructType(
-        [T.StructField(f.name, f.dataType, True) for f in out_fields]
-    )
-    probe_cols = probe.columns
-    tol = pd.Timedelta(seconds=tolerance_seconds) if tolerance_seconds else None
-
-    def merge(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        left = left.drop(columns=[bucket])
-        right = right.drop(columns=[bucket])
-        if left.empty:
-            return pd.DataFrame(columns=probe_cols + values)
-        left = left.sort_values(probe_ts, kind="mergesort")
-        if right.empty:
-            res = left.copy()
-            for v in values:
-                res[v] = None
-            return res[probe_cols + values]
-        right = right[keys + [build_ts] + values].sort_values(
-            build_ts, kind="mergesort"
-        )
-        if build_ts == probe_ts:
-            right = right.rename(columns={build_ts: "__rts"})
-            rts = "__rts"
-        else:
-            rts = build_ts
-        res = pd.merge_asof(
-            left,
-            right,
-            left_on=probe_ts,
-            right_on=rts,
-            by=keys,
-            allow_exact_matches=allow_exact_matches,
-            tolerance=tol,
-            direction="backward",
-        )
-        return res[probe_cols + values]
-
-    return (
-        pb.groupBy(bucket)
-        .cogroup(bb.groupBy(bucket))
-        .applyInPandas(merge, schema=out_schema)
     )

@@ -1,4 +1,4 @@
-"""1-D watershed session splitting — the in-UDF peak/valley analog of the
+"""1-D watershed session splitting — the window-SQL analog of the
 reference's marker-based watershed (SURVEY.md W5).
 
 Reference: fextract/extractioncodes/FeatureExtractor.py:346-354 —
@@ -10,63 +10,33 @@ maxima of the value series are the markers; the session splits at the
 minimum between consecutive peaks. Rows up to and including the valley row
 belong to the left peak's basin (deterministic tie: first minimal row).
 
-Physically this is the SURVEY §7 plan of record for W5: an Arrow-batched
-``applyInPandas`` per entity bucket — the fixpoint flood is genuinely
-iterative in 2-D, but in 1-D it collapses to a vectorized peak/valley scan
-(numpy, no per-row Python). Entities are hash-bucketed so high-cardinality
-keys don't fragment Arrow batches (same pattern as asof._asof_cogroup).
+The flood is iterative in 2-D; in 1-D every fact it needs is a window
+aggregate, so the operator is window SQL text like ``sessionize``.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-import numpy as np
-import pandas as pd
-
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
+
+from combinedfeatureextraction_spark.operators.window_features import (
+    ROWS_TO_CURRENT,
+    sql_ident,
+    with_sql_columns,
+)
+
+_WHOLE = "ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING"
+# helper columns (plain identifiers: no quoting needed in the SQL text)
+_REST, _PREV, _STEP = "__cfe_ws_rest", "__cfe_ws_prev", "__cfe_ws_step"
+_PEAK, _LATER, _INTERVAL = "__cfe_ws_peak", "__cfe_ws_later", "__cfe_ws_interval"
 
 
-def split_session_numpy(v: np.ndarray) -> np.ndarray:
-    """Subsession ids (0-based) for one session's ordered values.
-
-    Peaks = strict local maxima (plateaus count once, at their first row —
-    ``peak_local_max`` footprint semantics collapse a flat top to one
-    marker). 0 or 1 peak → no split. k peaks → k basins; boundary after
-    the first minimal row strictly between consecutive peaks."""
-    n = len(v)
-    if n == 0:
-        return np.zeros(0, dtype=np.int64)
-    # peak = first row of a plateau (strict rise on the left / sequence
-    # start) whose NEXT value change is a drop (or there is none). A
-    # one-step lookahead would miscount a plateau that later RISES, so the
-    # next nonzero step direction is backward-filled across plateaus.
-    left = np.empty(n, dtype=bool)
-    left[0] = True
-    left[1:] = v[1:] > v[:-1]
-    if n == 1:
-        peaks = np.array([0])
-    else:
-        d = np.sign(np.diff(v))  # n-1 edges
-        idx = np.arange(n - 1)
-        pos = np.where(d != 0, idx, n - 1)  # sentinel: no change after
-        nextpos = np.minimum.accumulate(pos[::-1])[::-1]
-        nextdir = np.where(nextpos < n - 1, d[np.minimum(nextpos, n - 2)], 0.0)
-        right = np.empty(n, dtype=bool)
-        right[-1] = True
-        right[:-1] = nextdir <= 0  # next change drops, or plateau to end
-        peaks = np.flatnonzero(left & right)
-    if len(peaks) <= 1:
-        return np.zeros(n, dtype=np.int64)
-    out = np.zeros(n, dtype=np.int64)
-    for k in range(len(peaks) - 1):
-        a, b = peaks[k], peaks[k + 1]
-        valley = a + 1 + int(np.argmin(v[a + 1 : b + 1]))
-        # rows AFTER the valley belong to the next basin
-        out[valley + 1 :] = k + 1
-    return out
+def _over(part: Sequence[str], order: str, frame: str = "") -> str:
+    """``OVER (PARTITION BY part ORDER BY order [frame])``; ``order`` is
+    SQL text, so it can carry directions and NULL placement."""
+    spec = f"PARTITION BY {', '.join(map(sql_ident, part))} ORDER BY {order}"
+    return f"OVER ({spec} {frame})" if frame else f"OVER ({spec})"
 
 
 def watershed_split(
@@ -76,39 +46,59 @@ def watershed_split(
     value: str,
     session_col: str = "session_id",
     out: str = "subsession_id",
-    bucket_count: int = 32,
     tiebreak: Sequence[str] = (),
 ) -> DataFrame:
     """Split every (entity, session) at value-valleys between value-peaks.
 
     Output: input columns + ``out`` (0-based subsession id within the
-    session). One shuffle on the entity-hash bucket; inside a bucket the
-    work is a vectorized numpy pass per session. ``tiebreak``: extra
-    sort columns after ``ts`` — pass a unique id when ``ts`` can repeat
-    within an entity, otherwise the within-tie order (and therefore the
-    peak/valley scan) inherits nondeterministic shuffle order."""
-    keys = list(keys)
-    bucket = "__cfe_bucket"
-    schema = T.StructType(
-        list(df.schema.fields) + [T.StructField(out, T.LongType(), False)]
-    )
-    in_cols = df.columns
+    session). Peaks are plateau starts that rise on the left (or start
+    the session) and whose next value change is a drop (or none); the
+    valley between consecutive peaks is the first minimal row after the
+    left one, up to the right one. NULL values: a NULL predecessor counts
+    as a session start for the peak test, steps to or from a NULL are
+    skipped, and a NULL value sorts after every value when the valley is
+    picked (``value ASC NULLS LAST``).
 
-    def apply(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(
-            [*keys, session_col, ts, *tiebreak], kind="mergesort"
-        )
-        sub = np.concatenate(
-            [
-                split_session_numpy(g[value].to_numpy(dtype=np.float64))
-                for _, g in pdf.groupby([*keys, session_col], sort=False)
-            ]
-        ) if len(pdf) else np.zeros(0, dtype=np.int64)
-        pdf = pdf.assign(**{out: sub})
-        return pdf[in_cols + [out]]
-
-    return (
-        df.withColumn(bucket, F.pmod(F.xxhash64(*keys), F.lit(bucket_count)))
-        .groupBy(bucket)
-        .applyInPandas(lambda _, pdf: apply(pdf.drop(columns=[bucket])), schema)
+    Windows on (keys, session) reuse the entity-key exchange of
+    ``sessionize``. Facts about following rows are running frames on the
+    descending sort: Spark recomputes an UNBOUNDED FOLLOWING frame per
+    row, quadratic in the session length. ``tiebreak``: sort columns
+    after ``ts`` — pass a unique id when ``ts`` can repeat within an
+    entity, else the within-tie order is nondeterministic."""
+    part = [*keys, session_col]
+    back = ", ".join(f"{sql_ident(c)} DESC" for c in [ts, *tiebreak])
+    by_back, back_run = _over(part, back), _over(part, back, ROWS_TO_CURRENT)
+    v = sql_ident(value)
+    # REST: rows from this one to the session end; PREV: the value before
+    # it; STEP: sign of the step to the value after it
+    s = with_sql_columns(df, {
+        _REST: f"row_number() {by_back}",
+        _PREV: f"lead({v}) {by_back}",
+        _STEP: f"sign(lag({v}) {by_back} - {v})",
+    })
+    # PEAK: rises on the left (or starts) and the NEXT nonzero step — the
+    # last one met walking back from the session end — is a drop or none
+    s = with_sql_columns(s, {
+        _PEAK: f"CASE WHEN ({_PREV} IS NULL OR {v} > {_PREV})"
+        f" AND coalesce(last(CASE WHEN {_STEP} <> 0 THEN {_STEP} END, true)"
+        f" {back_run}, 0) <= 0 THEN 1 ELSE 0 END",
+    })
+    # LATER: peaks at or after the row; INTERVAL: peaks before it — with
+    # both > 0, the row lies in (peak INTERVAL, peak INTERVAL + 1]
+    s = with_sql_columns(s, {
+        _LATER: f"sum({_PEAK}) {back_run}",
+        _INTERVAL: f"sum({_PEAK}) {_over(part, back, _WHOLE)}"
+        f" - sum({_PEAK}) {back_run}",
+    })
+    # an interval's valley is its first argmin (most REST among minima);
+    # the subsession id counts the valleys before the row: one per
+    # earlier interval, plus the row's own once the row is past it
+    valley = f"first_value({_REST}) " + _over(
+        [*part, _INTERVAL], f"{v} ASC NULLS LAST, {_REST} DESC"
     )
+    s = with_sql_columns(s, {
+        out: f"coalesce(CAST(greatest({_INTERVAL} - 1, 0) + CASE WHEN"
+        f" {_INTERVAL} > 0 AND {_LATER} > 0 AND {valley} > {_REST}"
+        " THEN 1 ELSE 0 END AS BIGINT), 0)",
+    })
+    return s.select(*df.columns, out)

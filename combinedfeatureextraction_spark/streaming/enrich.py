@@ -7,9 +7,8 @@ time-grid and resolves each probe row with a pure projection + broadcast
 equi-join — there is no window, no state store and no watermark
 requirement, so the identical operator runs unchanged as a stateless
 stream-static join.
-(The union/cogroup strategies need a global sort/cogroup and have no
-streaming form; a non-dim build side raises rather than silently
-degrading.)
+(The union strategy needs a global sort and has no streaming form; a
+non-dim build side raises rather than silently degrading.)
 
 ``streaming_exact_dedup``: the streaming dual of dedup.exact_dedup —
 ``dropDuplicatesWithinWatermark`` on the 64-bit content hash. State is

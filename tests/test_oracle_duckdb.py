@@ -48,3 +48,18 @@ def test_every_query_key_has_callable():
     oracles = entrymod.oracle_sql()
     assert set(oracles) <= set(qs)
     assert len(qs) >= 50
+
+
+def test_table_schema_follows_rewritten_file(spark, tmp_path):
+    """``_t`` reuses a table's schema only while the file is unchanged: a
+    parquet file rewritten at the same path with a renamed column must
+    read with the new column, not the stale one as NULLs."""
+    import pandas as pd
+
+    path = tmp_path / "events.parquet"
+    pd.DataFrame({"a": [1, 2]}).to_parquet(path, index=False)
+    assert entrymod._t(spark, str(tmp_path), "events").columns == ["a"]
+    pd.DataFrame({"b": [3, 4, 5]}).to_parquet(path, index=False)
+    df = entrymod._t(spark, str(tmp_path), "events")
+    assert df.columns == ["b"]
+    assert sorted(r.b for r in df.collect()) == [3, 4, 5]

@@ -29,18 +29,23 @@ def test_profile_record(tmp_path):
     out = tmp_path / "record.json"
     res = subprocess.run(
         [sys.executable, "scripts/profile.py", "six_stat_hierarchy", "watershed_split",
-         "--sf", "/root/testdata/sf0.001", "--reps", "1", "--out", str(out)],
+         "polygon_ring", "--sf", "/root/testdata/sf0.001", "--reps", "1",
+         "--out", str(out)],
         cwd=ROOT, capture_output=True, text=True, timeout=600,
     )
     assert res.returncode == 0, res.stderr[-3000:]
     rec = json.loads(out.read_text())
     assert set(rec) == {"sf", "reps", "nproc", "cpus", "queries"}
-    assert set(rec["queries"]) == {"six_stat_hierarchy", "watershed_split"}
+    assert set(rec["queries"]) == {
+        "six_stat_hierarchy", "watershed_split", "polygon_ring"
+    }
     for name, q in rec["queries"].items():
         assert set(q) == KEYS, name
         assert q["build_s"] > 0 and q["plan_s"] > 0 and q["exec_s"] > 0, name
         assert q["spark.jobs"] >= 1 and q["spark.tasks"] >= 1, name
-    # watershed_split runs applyInPandas; six_stat_hierarchy stays in the JVM
-    assert rec["queries"]["watershed_split"]["spark.python_bytes"] > 0
+    # polygon_ring crosses the Arrow boundary of per_row_map; the window
+    # SQL of watershed_split and six_stat_hierarchy stays in the JVM
+    assert rec["queries"]["polygon_ring"]["spark.python_bytes"] > 0
+    assert rec["queries"]["watershed_split"]["spark.python_bytes"] == 0
     assert rec["queries"]["six_stat_hierarchy"]["spark.python_bytes"] == 0
     assert _work_entries() == before
