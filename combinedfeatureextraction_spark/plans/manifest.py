@@ -13,8 +13,8 @@ Granularity = the bucket partition (sources.catalog.with_bucket). A run:
     result_df.filter(bucket ∈ todo) → write → run.commit_bucket(...)
 
 Buckets are committed in GROUPS (one Spark job per group, default all
-pending at once): each commit records rows / wall-ms / snapshot id, so a
-killed run restarts exactly at the first uncommitted group. At 100 TB the
+pending at once): each commit records rows / group wall / snapshot id, so
+a killed run restarts exactly at the first uncommitted group. At 100 TB the
 group is the unit of incremental progress, and the filter on pending
 buckets prunes completed partitions AT THE SCAN (partition pruning on the
 bucket column) — a resume never rereads finished data.
@@ -23,9 +23,9 @@ Counts come from the write itself, not from a second job: ``write_fn``
 commits a snapshot of the table rooted at the run's ``out_dir``
 (``sources.catalog.write_snapshot``), whose manifest records each
 partition's rows from the committed parquet footers; ``rows_in`` /
-``rows_out`` are those footer rows. ``wall_ms`` is the group's wall split
-evenly across its buckets (one job writes them all, so no per-bucket
-wall exists).
+``rows_out`` are those footer rows. One job writes the whole group, so no
+per-bucket wall exists: each bucket's record holds the group's
+``group_wall_ms`` and its bucket count ``group_buckets``.
 """
 
 from __future__ import annotations
@@ -69,17 +69,22 @@ class ResumableRun:
         bucket: int,
         rows_in: int,
         rows_out: int,
-        wall_ms: float,
+        group_wall_ms: float,
+        group_buckets: int,
         snapshot_id: str | None = None,
         extra: dict | None = None,
     ) -> None:
+        """Record ``bucket`` as committed (atomic rename). ``group_wall_ms``
+        is the wall of the whole group of ``group_buckets`` buckets that one
+        job wrote together with this one, not a per-bucket time."""
         rec = {
             "run_id": self.run_id,
             "bucket": bucket,
             "status": "committed",
             "rows_in": rows_in,
             "rows_out": rows_out,
-            "wall_ms": wall_ms,
+            "group_wall_ms": group_wall_ms,
+            "group_buckets": group_buckets,
             "snapshot_id": snapshot_id,
             "committed_at_ms": int(time.time() * 1000),
             **(extra or {}),
@@ -117,7 +122,7 @@ class ResumableRun:
             n = stats.get(str(b), {}).get("rows", 0)
             self.commit_bucket(
                 b, rows_in=n, rows_out=n,
-                wall_ms=wall / len(pending),
+                group_wall_ms=wall, group_buckets=len(pending),
                 snapshot_id=snapshot_id,
             )
         return {"processed": len(pending), "skipped": len(all_buckets) - len(pending)}

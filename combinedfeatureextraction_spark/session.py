@@ -12,8 +12,29 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
+#: free bytes /dev/shm must report for Spark's scratch to go there;
+#: Docker's default /dev/shm is 64 MB, where a spill fails with ENOSPC
+SHM_MIN_FREE_BYTES = 2 << 30
 #: the directory that holds this package
 _PKG_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _local_dir() -> str | None:
+    """Shuffle/spill scratch on the fastest local storage (guide §5): the
+    /dev/shm tmpfs when it has ``SHM_MIN_FREE_BYTES`` free, where /tmp may
+    be disk-backed. On a cluster this is the NVMe local dir the platform
+    provisions per executor. ``CFE_SPARK_LOCAL_DIR`` overrides; ``None``
+    (Spark's default) where /dev/shm is missing or too small."""
+    local_dir = os.environ.get("CFE_SPARK_LOCAL_DIR")
+    if local_dir is not None:
+        return local_dir
+    try:
+        st = os.statvfs("/dev/shm")
+    except OSError:
+        return None
+    if st.f_bavail * st.f_frsize < SHM_MIN_FREE_BYTES:
+        return None
+    return "/dev/shm/cfe_spark_local"
 
 
 def get_spark(
@@ -76,15 +97,16 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("CFE_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # Local files through RawLocalFileSystem, not the checksummed
+        # LocalFileSystem that wraps it: no .crc sidecar per written file.
+        # Without the native Hadoop library each created file or directory
+        # forks a `chmod` process (Shell.execCommand in setPermission), so
+        # a sidecar is one more fork and one more file per output file.
+        # Affects file:// paths only (HDFS and S3 keep their own
+        # filesystems); parquet pages keep their own CRC.
+        .config("spark.hadoop.fs.file.impl", "org.apache.hadoop.fs.RawLocalFileSystem")
     )
-    # Shuffle/spill scratch on the fastest local storage (guide §5):
-    # the /dev/shm tmpfs by default, where /tmp may be disk-backed. On a
-    # cluster this is the NVMe local dir the platform provisions per
-    # executor; CFE_SPARK_LOCAL_DIR overrides, and the Spark default
-    # applies where /dev/shm doesn't exist.
-    local_dir = os.environ.get("CFE_SPARK_LOCAL_DIR")
-    if local_dir is None and os.path.isdir("/dev/shm"):
-        local_dir = "/dev/shm/cfe_spark_local"
+    local_dir = _local_dir()
     if local_dir:
         os.makedirs(local_dir, exist_ok=True)
         b = b.config("spark.local.dir", local_dir)

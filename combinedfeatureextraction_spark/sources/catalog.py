@@ -19,17 +19,29 @@ Layout contract for the sequences table (the 100 TB design): partition by
 hash-bucket of doc_id (co-locates every entity's history → as-of joins and
 windows shuffle at most once) and sort within files by (doc_id, ts) —
 partition columns first, then ``sort_within``, in the one sort the write
-executes. Parquet row-group min/max stats on doc_id prune the entity axis
-(the engine-level equivalent of the reference's persisted Xmin/Xmax zone
-maps, fextract/extraction_utils/xml_to_mask_minmax.py:233-295). The time
-axis is NOT pruned by footer stats: Spark writes ``ts`` as INT96
+executes. The bucket is ``pmod(hash(doc_id), n)``: Spark's Murmur3 (seed
+42), the function behind ``HashPartitioning``'s partition id and
+``bucketBy``. When the shuffle partition count ``p`` divides ``n``, every
+bucket sits in one partition of the plan's ``doc_id`` exchange, so each
+write task holds whole buckets and each bucket is ONE file — with no
+exchange of its own. When ``p`` does not divide ``n`` a bucket spans
+``p / gcd(p, n)`` tasks (one file each). Parquet row-group min/max stats
+on doc_id prune the entity axis (the engine-level equivalent of the
+reference's persisted Xmin/Xmax zone maps,
+fextract/extraction_utils/xml_to_mask_minmax.py:233-295). The time axis is
+NOT pruned by footer stats: Spark writes ``ts`` as INT96
 (``spark.sql.parquet.outputTimestampType``'s default), a type parquet keeps
 no min/max statistics for, and a per-write option does not change it.
 
 Each snapshot manifest records, per partition it wrote, the ``rows`` /
 ``files`` / ``bytes`` of its committed parquet files, rows read from the
 file footers (Iceberg's per-file ``record_count``); resume manifests take
-their row counts from there (``snapshot_partition_stats``).
+their row counts from there (``snapshot_partition_stats``). It also
+records the ``bucket_spec`` (hash, key, n) that ``with_bucket`` tagged the
+bucket column with: a ``replace_partitions`` commit whose spec differs
+from its parent's raises ``BucketSpecMismatch`` before writing, because a
+bucket value under another function holds other rows and the merge would
+duplicate them.
 """
 
 from __future__ import annotations
@@ -56,10 +68,25 @@ def iceberg_available(spark: SparkSession) -> bool:
 
 def with_bucket(df: DataFrame, key: str = "doc_id", n_buckets: int = 32) -> DataFrame:
     """Deterministic hash bucket — the partition key for layout + resume
-    granularity. xxhash64 ≥ 0 via pmod."""
+    granularity: ``pmod(hash(key), n_buckets)``, Spark's own partition
+    hash (Murmur3, seed 42), so ``bucket % p`` is the partition id of a
+    ``p``-way hash exchange on ``key`` whenever ``p`` divides
+    ``n_buckets`` — keep the shuffle partition count a divisor of the
+    bucket count and each bucket is written by one task, as one file.
+    The column's metadata carries the ``bucket_spec`` that
+    ``write_snapshot`` records."""
+    spec = {"hash": "murmur3", "key": key, "n": n_buckets}
     return df.withColumn(
-        BUCKET_COL, F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets)).cast("int")
+        BUCKET_COL,
+        F.pmod(F.hash(F.col(key)), F.lit(n_buckets)).cast("int")
+        .alias(BUCKET_COL, metadata={"bucket_spec": spec}),
     )
+
+
+class BucketSpecMismatch(ValueError):
+    """A ``replace_partitions`` commit whose bucket function (hash, key,
+    n) is not its parent snapshot's: the same bucket value would name
+    other rows, so merging would duplicate or lose them."""
 
 
 def _snapshots_dir(path: Path) -> Path:
@@ -95,6 +122,9 @@ def write_snapshot(
     ``mode="replace_partitions"``: only the partition values present in
     ``df`` are replaced; everything else is inherited from the parent
     snapshot (the incremental / resume path — Iceberg dynamic overwrite).
+    It raises ``BucketSpecMismatch``, writing nothing, when ``df``'s
+    bucket spec is not the parent's (a bucketed ``df`` onto a parent that
+    recorded no spec included).
 
     Data always lands in a fresh snapshot directory (append-only storage);
     the commit is the atomic CURRENT rename, so readers never observe a
@@ -102,9 +132,21 @@ def write_snapshot(
     """
     path = Path(path)
     parent = current_snapshot_id(path)
+    part_cols = [c for c in partition_by if c in df.columns]
+    spec = (
+        df.schema[BUCKET_COL].metadata.get("bucket_spec")
+        if BUCKET_COL in part_cols else None
+    )
+    if mode == "replace_partitions" and parent is not None:
+        parent_spec = _read_manifest(path, parent).get("bucket_spec")
+        if spec != parent_spec:
+            raise BucketSpecMismatch(
+                f"bucket spec {spec} does not match {parent_spec} of parent"
+                f" snapshot {parent!r} under {path}; rewrite the table with"
+                ' mode="overwrite"'
+            )
     seq = len(list_snapshots(path))
     snap_id = f"{seq:06d}-{uuid.uuid4().hex[:10]}"
-    part_cols = [c for c in partition_by if c in df.columns]
     # ONE sort, partition columns first: the planned write requires its
     # partition columns as the leading order and would otherwise replace a
     # (doc_id, ts)-only sort with its own Sort [bucket]
@@ -129,6 +171,7 @@ def write_snapshot(
         "partition_by": part_cols,
         "partitions": list(stats),
         "partition_stats": stats,
+        "bucket_spec": spec,
         "sort_within": list(sort_within),
         "committed_at_ms": int(time.time() * 1000),
         "schema": out.schema.json(),

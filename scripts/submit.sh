@@ -23,7 +23,8 @@ print('packaged', '$ZIP')
 
 MASTER="${SPARK_MASTER:-local[${SPARK_GRAFT_CPUS:-*}]}"
 # local mode: the driver JVM runs the executors — size it like get_spark
-# does (spark-submit's 1g default OOMs the 23M-row window sort)
+# does (spark-submit's 1g default OOMs the 23M-row window sort); file://
+# output skips the .crc sidecars as in get_spark (session.py says why)
 exec spark-submit \
   --master "$MASTER" \
   --driver-memory "${CFE_DRIVER_MEM:-8g}" \
@@ -31,5 +32,6 @@ exec spark-submit \
   --conf spark.sql.adaptive.enabled=true \
   --conf spark.sql.execution.arrow.pyspark.enabled=true \
   --conf spark.sql.session.timeZone=UTC \
+  --conf spark.hadoop.fs.file.impl=org.apache.hadoop.fs.RawLocalFileSystem \
   --py-files "$ZIP" \
   "$JOB" "$@"

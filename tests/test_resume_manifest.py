@@ -66,7 +66,8 @@ def test_resume_skips_completed(spark, seqs_df, tmp_path):
     run = ResumableRun(out_dir, "runA")
     # simulate a prior partial run: buckets 0-2 already committed
     for b in (0, 1, 2):
-        run.commit_bucket(b, rows_in=0, rows_out=0, wall_ms=0.0)
+        run.commit_bucket(b, rows_in=0, rows_out=0,
+                          group_wall_ms=0.0, group_buckets=3)
     assert run.completed_buckets() == {0, 1, 2}
     assert run.pending_buckets(all_buckets) == [3, 4, 5, 6, 7]
 
@@ -109,6 +110,10 @@ def test_resume_skips_completed(spark, seqs_df, tmp_path):
         assert rec["status"] == "committed"
         assert rec["rows_in"] == rec["rows_out"] == counts.get(b, 0), b
         assert rec["snapshot_id"] == writes[0]
+        # one job wrote the five pending buckets: the record holds the
+        # group's wall and size, not a per-bucket share
+        assert rec["group_buckets"] == 5 and rec["group_wall_ms"] > 0
+        assert "wall_ms" not in rec
 
     run.write_run_metrics({"wall_ms": 123.0, "rows": int(df.count())})
     m = json.loads((run.manifest_dir / "run_metrics.json").read_text())
@@ -207,3 +212,76 @@ def test_expire_snapshots(spark, seqs_df, tmp_path):
 
     with _pt.raises(Exception):
         read_snapshot(spark, tbl, snapshot_id=s2)
+
+
+def test_replace_partitions_rejects_other_bucket_spec(spark, seqs_df, tmp_path):
+    """A resume whose bucket function differs from the table's (another
+    bucket count, or a parent written before specs were recorded) would
+    put the same rows under other bucket values and duplicate them on
+    merge: a named error before any data is written, CURRENT unmoved."""
+    from combinedfeatureextraction_spark.sources.catalog import (
+        BucketSpecMismatch,
+        list_snapshots,
+    )
+
+    n = seqs_df.count()
+    untagged = seqs_df.withColumn(  # the bucket column before specs existed
+        BUCKET_COL, F.pmod(F.xxhash64("doc_id"), F.lit(8)).cast("int"))
+    for name, parent_df, spec in (
+        ("other_n", with_bucket(seqs_df, "doc_id", 8),
+         {"hash": "murmur3", "key": "doc_id", "n": 8}),
+        ("no_spec", untagged, None),
+    ):
+        tbl = tmp_path / name
+        snap = write_snapshot(parent_df, tbl, mode="replace_partitions")
+        assert json.loads(
+            (tbl / "snapshots" / f"{snap}.json").read_text()
+        )["bucket_spec"] == spec
+        with pytest.raises(BucketSpecMismatch, match=snap):
+            write_snapshot(with_bucket(seqs_df, "doc_id", 4), tbl,
+                           mode="replace_partitions")
+        assert current_snapshot_id(tbl) == snap
+        assert list_snapshots(tbl) == [snap]
+        assert [p.name for p in (tbl / "data").iterdir()] == [f"snap={snap}"]
+        assert read_snapshot(spark, tbl).count() == n
+    # the same spec resumes; an overwrite may change it
+    tbl = tmp_path / "other_n"
+    write_snapshot(with_bucket(seqs_df, "doc_id", 8), tbl, mode="replace_partitions")
+    write_snapshot(with_bucket(seqs_df, "doc_id", 4), tbl, mode="overwrite")
+    assert read_snapshot(spark, tbl).count() == n
+
+
+@pytest.mark.parametrize("shuffle_partitions", [2, 4])
+def test_pipeline_writes_one_file_per_bucket(spark, tmp_path, shuffle_partitions):
+    """With the shuffle partition count dividing the bucket count, every
+    bucket sits in one task of the pipeline's doc_id exchange: one parquet
+    file per bucket directory, and no .crc sidecar anywhere."""
+    from combinedfeatureextraction_spark.plans.pipeline import rowlevel_features
+    from combinedfeatureextraction_spark.sources import fixtures
+
+    seqs = fixtures.sequences_spark(spark, 60, seed=42)
+    states = fixtures.states_spark(spark, seed=42)
+    tbl = tmp_path / "tbl"
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
+    try:
+        feat = with_bucket(rowlevel_features(seqs, states, carry_payload=True),
+                           "doc_id", 32)
+        snap = write_snapshot(feat, tbl, sort_within=("doc_id", "ts"))
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    dirs = [d for d in (tbl / "data" / f"snap={snap}").iterdir() if d.is_dir()]
+    assert dirs
+    for d in dirs:
+        assert len(list(d.glob("*.parquet"))) == 1, d.name
+    assert list(tbl.rglob("*.crc")) == []
+
+
+@pytest.mark.parametrize("p", [1, 2, 4, 8])
+def test_bucket_is_hash_partition_id(seqs_df, p):
+    """``bucket % p`` is the partition a ``p``-way hash exchange on the
+    key puts the row in, for every ``p`` dividing the bucket count."""
+    df = with_bucket(seqs_df, "doc_id", 32).repartition(p, "doc_id")
+    bad = df.filter(
+        (F.col(BUCKET_COL) % p) != F.spark_partition_id()).count()
+    assert bad == 0

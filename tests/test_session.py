@@ -1,5 +1,6 @@
 """``session.get_spark``: Python workers import the engine wherever the
-driver runs from."""
+driver runs from; local files carry no checksum sidecars; Spark's scratch
+goes to /dev/shm only when it has room."""
 
 from __future__ import annotations
 
@@ -37,3 +38,34 @@ def test_python_workers_import_engine_outside_the_checkout(tmp_path):
                          capture_output=True, text=True, timeout=300)
     assert res.returncode == 0, res.stderr[-3000:]
     assert res.stdout.strip().splitlines()[-1] == "[(0, 1), (1, 3), (2, 5)]"
+
+
+def test_local_files_skip_checksum_sidecars(spark):
+    """file:// paths go through RawLocalFileSystem: no .crc per file."""
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    assert conf.get("fs.file.impl") == "org.apache.hadoop.fs.RawLocalFileSystem"
+
+
+def test_local_dir_needs_free_shm(monkeypatch):
+    """/dev/shm hosts Spark's scratch only with the floor free; below it
+    (Docker's 64 MB default) or without /dev/shm, Spark's default;
+    CFE_SPARK_LOCAL_DIR wins either way."""
+    from combinedfeatureextraction_spark import session
+
+    def statvfs(free):
+        def fake(path):
+            assert path == "/dev/shm"
+            if free is None:
+                raise FileNotFoundError(path)
+            blocks = free // 4096
+            return os.statvfs_result((4096, 4096, 0, 0, blocks, 0, 0, 0, 0, 255))
+        return fake
+
+    monkeypatch.delenv("CFE_SPARK_LOCAL_DIR", raising=False)
+    floor = session.SHM_MIN_FREE_BYTES
+    for free, want in ((floor, "/dev/shm/cfe_spark_local"),
+                       (64 << 20, None), (floor - 4096, None), (None, None)):
+        monkeypatch.setattr(session.os, "statvfs", statvfs(free))
+        assert session._local_dir() == want, free
+    monkeypatch.setenv("CFE_SPARK_LOCAL_DIR", "/elsewhere")
+    assert session._local_dir() == "/elsewhere"
