@@ -401,12 +401,11 @@ def q_minhash_dedup(spark, sf_dir):
 
 def q_simhash_dedup(spark, sf_dir):
     """128-bit SimHash near-dup pairs, FULLY ORACLED. Two properties make
-    exact DuckDB verification possible: (1) hasher="md5" — md5 is
+    exact DuckDB verification possible: (1) the shingle hash is md5,
     bit-identical in every engine, so DuckDB recomputes the identical
     signatures from the same 2-gram shingles (nibble k bit b ↦ global
     bit (k//8)·32 + (7−k%8)·4 + b — 8-char big-endian hex groups, see
-    _md5_word_expr — the documented portability contract; production
-    default stays xxhash64, same downstream machinery byte-for-byte);
+    _md5_word_expr — the documented portability contract);
     (2) max_hamming=3 with 4×32-bit bands — by pigeonhole a hamming ≤ 3
     pair ALWAYS shares a band, so LSH recall is complete and the output
     is exactly {pairs with hamming ≤ 3}, which DuckDB enumerates
@@ -425,8 +424,7 @@ def q_simhash_dedup(spark, sf_dir):
     )
     corpus = _spread(docs.unionByName(mutated), "doc_id")
     out = simhash_dedup(
-        corpus, "doc_id", "text", max_hamming=3, ngram=2, hasher="md5",
-        max_bucket=None,
+        corpus, "doc_id", "text", max_hamming=3, ngram=2, max_bucket=None,
     )
     return out.select("id_a", "id_b", F.col("hamming").cast("long").alias("hamming"))
 
@@ -3063,8 +3061,8 @@ SELECT c.doc_id AS doc_id,
        coalesce(cc.comp, c.doc_id) AS canonical_id
 FROM corpus c LEFT JOIN cc ON c.doc_id = cc.id
 """,
-        # simhash_dedup: exact dual. hasher="md5" makes the signatures
-        # engine-portable (nibble k bit b -> global bit
+        # simhash_dedup: exact dual. The md5 shingle hash makes the
+        # signatures engine-portable (nibble k bit b -> global bit
         # (k//8)*32 + (7 - k%8)*4 + b, 8-char big-endian hex groups —
         # see _md5_word_expr and the bits CTE below) and max_hamming=3
         # with 4x32-bit bands makes LSH recall COMPLETE by pigeonhole,

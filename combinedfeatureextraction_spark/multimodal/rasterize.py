@@ -251,7 +251,6 @@ def polygon_component_features(
     df: DataFrame,
     points_col: str,
     id_cols: Sequence[str],
-    connectivity: int = 4,
 ) -> DataFrame:
     """id_cols + COMPONENT_FEATURES_SCHEMA per polygon row: rasterize →
     2-D connected components → per-component measurement, all inside ONE
@@ -260,7 +259,7 @@ def polygon_component_features(
     identical to polygon_mask_features."""
     return per_row_map(
         df, id_cols, [points_col],
-        lambda pts: component_features_numpy(pts, connectivity),
+        component_features_numpy,
         COMPONENT_FEATURES_SCHEMA.fields,
     )
 
@@ -480,8 +479,6 @@ def polygon_watershed_features(
     df: DataFrame,
     points_col: str,
     id_cols: Sequence[str],
-    connectivity: int = 4,
-    rel_peak: float = 0.5,
 ) -> DataFrame:
     """id_cols + WATERSHED_FEATURES_SCHEMA per polygon row — same pure-map
     100 TB shape as polygon_component_features: masks, distance fields,
@@ -489,7 +486,7 @@ def polygon_watershed_features(
     = input partitions."""
     return per_row_map(
         df, id_cols, [points_col],
-        lambda pts: watershed_features_numpy(pts, connectivity, rel_peak),
+        watershed_features_numpy,
         WATERSHED_FEATURES_SCHEMA.fields,
     )
 
@@ -612,14 +609,13 @@ def polygon_hole_features(
     df: DataFrame,
     points_col: str,
     id_cols: Sequence[str],
-    connectivity: int = 4,
 ) -> DataFrame:
     """id_cols + HOLE_FEATURES_SCHEMA per polygon row — same pure-map
     100 TB shape as the other rasterize operators (no shuffle, masks
     in-UDF only)."""
     return per_row_map(
         df, id_cols, [points_col],
-        lambda pts: hole_features_numpy(pts, connectivity),
+        hole_features_numpy,
         HOLE_FEATURES_SCHEMA.fields,
     )
 
@@ -676,14 +672,13 @@ def polygon_edt_features(
     df: DataFrame,
     points_col: str,
     id_cols: Sequence[str],
-    rel_thresh: float = 0.3,
 ) -> DataFrame:
     """id_cols + EDT_FEATURES_SCHEMA per polygon row — pure map, masks
     and distance fields in-UDF only, same 100 TB shape as the other
     rasterize operators."""
     return per_row_map(
         df, id_cols, [points_col],
-        lambda pts: edt_features_numpy(pts, rel_thresh),
+        edt_features_numpy,
         EDT_FEATURES_SCHEMA.fields,
     )
 

@@ -150,7 +150,6 @@ def sub_compartment_masks_numpy(
 def _cascade_kernel(
     op: str,
     params: Sequence[Mapping],
-    hole_area: int,
     measure: Callable[[np.ndarray, np.ndarray], tuple],
 ) -> Callable[[bytes, bytes], tuple]:
     """The step the three ``sub_compartment_*`` operators share: check
@@ -163,7 +162,7 @@ def _cascade_kernel(
     def kernel(payload: bytes, mask_payload: bytes) -> tuple:
         img = _decode_image_shaped(payload)
         m = _decode_image_shaped(mask_payload)[..., 0] > 0
-        return measure(img, sub_compartment_masks_numpy(img, m, params, hole_area))
+        return measure(img, sub_compartment_masks_numpy(img, m, params))
 
     return kernel
 
@@ -193,7 +192,6 @@ def sub_compartment_features(
     payload_col: str = "payload",
     mask_col: str = "mask_payload",
     id_col: str = "media_id",
-    hole_area: int = 10,
 ) -> DataFrame:
     """Per-row cascade → per-compartment area, mean uint8 V, and the
     reference's distance-transform features (calculate_distance_
@@ -227,7 +225,7 @@ def sub_compartment_features(
                 dt_max.append(0.0)
         return (*areas, *means, *dt_sum, *dt_mean, *dt_max)
 
-    kernel = _cascade_kernel("sub_compartment_features", params, hole_area, measure)
+    kernel = _cascade_kernel("sub_compartment_features", params, measure)
     return per_row_map(
         media, [id_col], [payload_col, mask_col], kernel, SUBCOMP_SCHEMA_FIELDS
     )
@@ -294,7 +292,6 @@ def sub_compartment_texture(
     payload_col: str = "payload",
     mask_col: str = "mask_payload",
     id_col: str = "media_id",
-    hole_area: int = 10,
 ) -> DataFrame:
     """Per-row cascade → per-compartment GLCM texture (the reference's
     calculate_texture_features, FeatureExtractor.py:500-520: image
@@ -309,7 +306,7 @@ def sub_compartment_texture(
             vals.extend(glcm_props_numpy(rgb_to_gray_u8(masked)))
         return tuple(vals)
 
-    kernel = _cascade_kernel("sub_compartment_texture", params, hole_area, measure)
+    kernel = _cascade_kernel("sub_compartment_texture", params, measure)
     return per_row_map(
         media, [id_col], [payload_col, mask_col], kernel, TEXTURE_SCHEMA_FIELDS
     )
@@ -359,7 +356,6 @@ def sub_compartment_morphology(
     payload_col: str = "payload",
     mask_col: str = "mask_payload",
     id_col: str = "media_id",
-    hole_area: int = 10,
 ) -> DataFrame:
     """Per-row cascade → the reference's morphological features
     (calculate_morphological_features, FeatureExtractor.py:521-575):
@@ -411,7 +407,7 @@ def sub_compartment_morphology(
             obj_aspect,
         )
 
-    kernel = _cascade_kernel("sub_compartment_morphology", params, hole_area, measure)
+    kernel = _cascade_kernel("sub_compartment_morphology", params, measure)
     return per_row_map(
         media, [id_col], [payload_col, mask_col], kernel, MORPH_SCHEMA_FIELDS
     )

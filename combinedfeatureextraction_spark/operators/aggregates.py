@@ -5,9 +5,7 @@ Reference analogs (SURVEY.md §2.4):
    Min/Max via numpy nan-aggregates, NaN/Inf→0
    (FeatureExtractor.py:584-616; stat registry :587-594, coalesce :611-614).
    ``np.nanstd`` is POPULATION std → ``stddev_pop``; ``np.nanmedian`` →
-   exact ``median`` (kept exact for allclose parity; ``approx=True``
-   switches to ``percentile_approx`` — the documented 100 TB escape hatch,
-   since exact median forces a full sort per group).
+   exact ``median`` (allclose parity with the reference).
  - per-class + per-slide hierarchy (A1 × A2-A5): expressed as GROUPING SETS
    ((entity), (entity, class)) so both levels come out of ONE pass —
    one shuffle, map-side partial aggregation for all algebraic stats.
@@ -30,7 +28,7 @@ from combinedfeatureextraction_spark.operators.window_features import sql_ident
 SIX_STATS = ("sum", "mean", "std", "median", "min", "max")
 
 
-def _stat_exprs(feature: str, approx: bool) -> list[Column]:
+def _stat_exprs(feature: str) -> list[Column]:
     # assembled as SQL strings — ONE py4j/parse round trip per stat: the
     # Column-operator form (nan_inf_to_zero(agg).alias() × 6 per feature)
     # cost ~0.1 s of driver-side build per feature (r06 profile), paid on
@@ -38,12 +36,11 @@ def _stat_exprs(feature: str, approx: bool) -> list[Column]:
     # identical to F.lit(0.0) / F.lit(float('inf')); duplicated aggregate
     # text dedups in planning exactly like the shared Column subtree did.
     q = sql_ident(feature)
-    med = f"percentile_approx({q}, 0.5D, 10000)" if approx else f"median({q})"
     pairs = [
         ("sum", f"sum({q})"),
         ("mean", f"avg({q})"),
         ("std", f"stddev_pop({q})"),
-        ("median", med),
+        ("median", f"median({q})"),
         ("min", f"min({q})"),
         ("max", f"max({q})"),
     ]
@@ -61,12 +58,11 @@ def six_stat_agg(
     df: DataFrame,
     features: Sequence[str],
     group_cols: Sequence[str],
-    approx: bool = False,
 ) -> DataFrame:
     """Flat 6-stat aggregate per group (A1)."""
     exprs: list[Column] = []
     for f in features:
-        exprs.extend(_stat_exprs(f, approx))
+        exprs.extend(_stat_exprs(f))
     return df.groupBy(*group_cols).agg(*exprs)
 
 
@@ -75,7 +71,6 @@ def six_stat_hierarchy(
     features: Sequence[str],
     entity: str,
     cls: str,
-    approx: bool = False,
 ) -> DataFrame:
     """GROUPING SETS ((entity), (entity, cls)) 6-stat rollup — the
     per-class + per-slide two-level hierarchy in one shuffle. Adds
@@ -83,7 +78,7 @@ def six_stat_hierarchy(
     on entity-level rows)."""
     exprs: list[Column] = []
     for f in features:
-        exprs.extend(_stat_exprs(f, approx))
+        exprs.extend(_stat_exprs(f))
     return (
         df.groupingSets([[entity], [entity, cls]], entity, cls)
         .agg(F.grouping(cls).cast("int").alias("grouping_level"), *exprs)

@@ -21,7 +21,7 @@ Scale design:
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -78,32 +78,57 @@ def jaccard(a: Column, b: Column) -> Column:
 EXACT_TIER_MAX_BLOCK = 100_000
 
 
-def _guard_exact_block(
-    narrow: DataFrame, block_col: str | None, cap: int | None, op: str, alt: str
-) -> None:
-    """Refuse a quadratic exact tier whose largest block exceeds ``cap``
-    rows — an unblocked large table would otherwise run an honest O(n²)
-    self-join. One cheap count job (per-block max when blocked); pass
-    ``max_block=None`` to force."""
-    if cap is None:
-        return
+def _blocked_pairs(
+    narrow: DataFrame,
+    id_col: str,
+    val_col: str,
+    block_col: str | None,
+    max_block: int | None,
+    sim: Callable[[Column, Column], Column],
+    out: str,
+    threshold: float,
+    op: str,
+    alt: str,
+) -> DataFrame:
+    """The exact tier: all (id_a, id_b, ``out``) pairs of ``narrow``
+    (id_col, val_col[, block_col]) rows in the same block with id_a <
+    id_b and ``sim(val_a, val_b) >= threshold``, as one self-join.
+
+    Guarded: a largest block over ``max_block`` rows raises rather than
+    running an honest O(n²) self-join (an unblocked large table). The
+    guard is one count job at call time (per-block max when blocked);
+    ``max_block=None`` skips it."""
+    if max_block is not None:
+        if block_col:
+            top = (
+                narrow.groupBy(block_col).count().agg(F.max("count")).first()[0]
+            )
+        else:
+            top = narrow.limit(max_block + 1).count()
+        if top and top > max_block:
+            where = f"block ('{block_col}')" if block_col else "input (unblocked)"
+            raise ValueError(
+                f"{op}: largest {where} has {'>' if not block_col else ''}"
+                f"{top} rows > max_block={max_block}; the exact tier is O(n²) "
+                f"per block. Split the input with block_col, use {alt} (the "
+                f"corpus-scale path), or pass max_block=None to force."
+            )
+
+    def side(s: str) -> DataFrame:
+        return narrow.select(
+            F.col(id_col).alias(f"id_{s}"), F.col(val_col).alias(f"_v{s}"),
+            *([F.col(block_col).alias(f"_blk{s}")] if block_col else []),
+        )
+
+    cond = F.col("id_a") < F.col("id_b")
     if block_col:
-        top = (
-            narrow.groupBy(block_col)
-            .count()
-            .agg(F.max("count"))
-            .first()[0]
-        )
-    else:
-        top = narrow.limit(cap + 1).count()
-    if top and top > cap:
-        where = f"block ('{block_col}')" if block_col else "input (unblocked)"
-        raise ValueError(
-            f"{op}: largest {where} has {'>' if not block_col else ''}"
-            f"{top} rows > max_block={cap}; the exact tier is O(n²) per "
-            f"block. Split the input with block_col, use {alt} (the "
-            f"corpus-scale path), or pass max_block=None to force."
-        )
+        cond = cond & (F.col("_blka") == F.col("_blkb"))
+    return (
+        side("a").join(side("b"), cond)
+        .withColumn(out, sim(F.col("_va"), F.col("_vb")))
+        .filter(F.col(out) >= threshold)
+        .select("id_a", "id_b", out)
+    )
 
 
 def ngram_jaccard_pairs(
@@ -118,7 +143,7 @@ def ngram_jaccard_pairs(
     """All-pairs n-gram Jaccard ≥ threshold. Exact but quadratic per block —
     ``block_col`` (e.g. source / length bucket) bounds the self-join; use
     minhash_lsh_dedup for corpus scale. A block larger than ``max_block``
-    rows raises (see _guard_exact_block) rather than silently running an
+    rows raises (see _blocked_pairs) rather than silently running an
     O(n²) join. NOTE: with ``max_block`` set (the default), construction
     is EAGER — the guard runs one Spark count job at call time, so this
     function is not a purely lazy plan builder; streaming inputs are
@@ -139,30 +164,14 @@ def ngram_jaccard_pairs(
     sh = (
         df.select(
             F.col(id_col), word_shingles(text_col, n).alias("_sh"),
-            *( [F.col(block_col)] if block_col else [] ),
+            *([F.col(block_col)] if block_col else []),
         )
         .repartition(n_part)
         .localCheckpoint(eager=False)
     )
-    _guard_exact_block(
-        sh, block_col, max_block, "ngram_jaccard_pairs", "minhash_lsh_dedup"
-    )
-    a = sh.select(
-        F.col(id_col).alias("id_a"), F.col("_sh").alias("_sha"),
-        *( [F.col(block_col).alias("_blk")] if block_col else [] ),
-    )
-    b = sh.select(
-        F.col(id_col).alias("id_b"), F.col("_sh").alias("_shb"),
-        *( [F.col(block_col).alias("_blkb")] if block_col else [] ),
-    )
-    cond = F.col("id_a") < F.col("id_b")
-    if block_col:
-        cond = cond & (F.col("_blk") == F.col("_blkb"))
-    return (
-        a.join(b, cond)
-        .withColumn("jaccard_sim", jaccard(F.col("_sha"), F.col("_shb")))
-        .filter(F.col("jaccard_sim") >= threshold)
-        .select("id_a", "id_b", "jaccard_sim")
+    return _blocked_pairs(
+        sh, id_col, "_sh", block_col, max_block, jaccard, "jaccard_sim",
+        threshold, "ngram_jaccard_pairs", "minhash_lsh_dedup",
     )
 
 
@@ -173,14 +182,10 @@ def hashed_shingle_sets(
     id_col: str,
     text_col: str,
     n: int = 3,
-    persist: bool = True,
 ) -> DataFrame:
     """(_id, _sh array<long>): distinct word-n-gram shingles hashed to
-    64-bit longs — the shared base for signatures AND verification.
-    Persisted by default because every downstream consumer (signature agg,
-    both sides of the verify join) reuses it; at corpus scale you would
-    materialize this to a table once per snapshot."""
-    sh = (
+    64-bit longs — the shared base for signatures AND verification."""
+    return (
         df.select(
             F.col(id_col).alias("_id"),
             F.explode(word_shingles(text_col, n)).alias("_s"),
@@ -189,7 +194,6 @@ def hashed_shingle_sets(
         .groupBy("_id")
         .agg(F.collect_set("_h").alias("_sh"))
     )
-    return sh.persist() if persist else sh
 
 
 def minhash_signatures_from_sets(
@@ -282,15 +286,28 @@ def _banded_candidates(
         + [f"{c}_a" for c in carry]
         + [f"{c}_b" for c in carry]
     )
-    if max_bucket is None:
-        band_rows = band_rows.localCheckpoint(eager=False)
+
+    def all_pairs(df: DataFrame) -> DataFrame:
         return (
-            side(band_rows, "a")
-            .join(side(band_rows, "b"), bucket_cols)
+            side(df, "a")
+            .join(side(df, "b"), bucket_cols)
             .filter(F.col("id_a") < F.col("id_b"))
             .select(*out_cols)
-            .distinct()
         )
+
+    def star(df: DataFrame, rep: str) -> DataFrame:
+        # edge rep → member for every member that is not the rep (the
+        # struct ``rep`` holds the rep's _id and carry columns)
+        return df.filter(F.col("_id") != F.col(rep)["_id"]).select(
+            F.col(rep)["_id"].alias("id_a"),
+            F.col("_id").alias("id_b"),
+            *[F.col(rep)[c].alias(f"{c}_a") for c in carry],
+            *[F.col(c).alias(f"{c}_b") for c in carry],
+        )
+
+    band_rows = band_rows.localCheckpoint(eager=False)
+    if max_bucket is None:
+        return all_pairs(band_rows).distinct()
     if not sig_cols:
         # no finer key available — every member is its own "signature"
         # group, i.e. reps == members (pre-fix behavior would star to the
@@ -307,20 +324,13 @@ def _banded_candidates(
     # window over ≤ a few buckets per consumer branch is cheaper than
     # the extra checkpoint materialization barrier was (the r05 shape
     # checkpointed ALL rows with both window columns attached).
-    band_rows = band_rows.localCheckpoint(eager=False)
     big_buckets = F.broadcast(
         band_rows.groupBy(*bucket_cols)
         .agg(F.count("*").alias("_bn"))
         .filter(F.col("_bn") > max_bucket)
         .select(*bucket_cols)
     )
-    small = band_rows.join(big_buckets, bucket_cols, "left_anti")
-    pairs_small = (
-        side(small, "a")
-        .join(side(small, "b"), bucket_cols)
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select(*out_cols)
-    )
+    pairs_small = all_pairs(band_rows.join(big_buckets, bucket_cols, "left_anti"))
 
     # ---- oversized buckets: signature sub-groups --------------------
     gw = Window.partitionBy(*bucket_cols, *sig_cols)
@@ -328,12 +338,7 @@ def _banded_candidates(
         "_gm", F.min(F.struct("_id", *carry)).over(gw)
     )
     # (a) within-group star edges (group min → member)
-    pairs_within = big.filter(F.col("_id") != F.col("_gm")["_id"]).select(
-        F.col("_gm")["_id"].alias("id_a"),
-        F.col("_id").alias("id_b"),
-        *[F.col("_gm")[c].alias(f"{c}_a") for c in carry],
-        *[F.col(c).alias(f"{c}_b") for c in carry],
-    ).select(*out_cols)
+    pairs_within = star(big, "_gm")
     # (b) one representative per distinct signature; exhaustive pairs
     # while they fit the cap, star beyond it. No checkpoint (r06): the
     # rep subtree hangs off the checkpointed band rows through a
@@ -347,21 +352,8 @@ def _banded_candidates(
         .withColumn("_rn", F.count("*").over(rw))
         .withColumn("_rm", F.min(F.struct("_id", *carry)).over(rw))
     )
-    reps_small = reps.filter(F.col("_rn") <= max_bucket)
-    pairs_reps = (
-        side(reps_small, "a")
-        .join(side(reps_small, "b"), bucket_cols)
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select(*out_cols)
-    )
-    pairs_reps_star = reps.filter(
-        (F.col("_rn") > max_bucket) & (F.col("_id") != F.col("_rm")["_id"])
-    ).select(
-        F.col("_rm")["_id"].alias("id_a"),
-        F.col("_id").alias("id_b"),
-        *[F.col("_rm")[c].alias(f"{c}_a") for c in carry],
-        *[F.col(c).alias(f"{c}_b") for c in carry],
-    ).select(*out_cols)
+    pairs_reps = all_pairs(reps.filter(F.col("_rn") <= max_bucket))
+    pairs_reps_star = star(reps.filter(F.col("_rn") > max_bucket), "_rm")
     return (
         pairs_small.union(pairs_within)
         .union(pairs_reps)
@@ -422,15 +414,16 @@ def minhash_lsh_dedup(
     (id_a, id_b, jaccard_sim).
 
     The hashed shingle sets are computed ONCE (persisted) and feed both
-    the signature/banding stage and the two sides of the verify join;
-    jaccard runs over long arrays (collision probability ~n²/2⁶⁴,
-    negligible). Documents shuffle once, by id — never all-pairs.
+    the signature/banding stage and the two sides of the verify join (at
+    corpus scale you would materialize them to a table once per
+    snapshot); jaccard runs over long arrays (collision probability
+    ~n²/2⁶⁴, negligible). Documents shuffle once, by id — never all-pairs.
 
     ``materialize=True`` eagerly computes the (small) pair output via
     localCheckpoint and unpersists the shingle sets before returning —
     use it when the result is consumed more than once or fed to an
     iterative consumer, so the cached shingles don't outlive their use."""
-    sh = hashed_shingle_sets(df, id_col, text_col, n, persist=True)
+    sh = hashed_shingle_sets(df, id_col, text_col, n).persist()
     cands = minhash_lsh_candidates_from_sets(sh, num_hashes, bands, max_bucket)
     out = (
         cands.join(
@@ -474,19 +467,13 @@ def simhash_signatures(
     id_col: str,
     text_col: str,
     ngram: int = 2,
-    hasher: str = "xxhash64",
 ) -> DataFrame:
     """(id, _sig_lo, _sig_hi): 128-bit SimHash as two longs — per bit,
-    sign of Σ_shingles (±1); bits 0-63 from xxhash64(shingle), 64-127 from
-    the independent xxhash64(shingle, 1).
-
-    ``hasher`` selects the shingle→128-bit hash primitive:
-    ``"xxhash64"`` (default, fastest — the production path) or ``"md5"``
-    (portable: md5 has bit-identical implementations in every engine, so
-    an external oracle such as DuckDB can recompute the signatures and
-    the ENTIRE operator becomes exactly verifiable end-to-end; the
-    banding / majority / verification machinery downstream is byte-for-
-    byte the same code either way).
+    sign of Σ_shingles (±1); a shingle's 128 bits are its md5 digest
+    (bits 0-63 from hex chars 1-16, 64-127 from chars 17-32, see
+    _md5_word_expr). md5 has bit-identical implementations in every
+    engine, so an external oracle such as DuckDB recomputes the
+    signatures and the ENTIRE operator is exactly verifiable end-to-end.
 
     128 bits (not 64) is the scale requirement: the banding stage splits
     the signature into 4×32-bit chunks, giving 2³² bucket values per
@@ -511,20 +498,11 @@ def simhash_signatures(
             "_s"
         ),
     )
-    if hasher == "xxhash64":
-        ex = ex.select(
-            "_id",
-            F.xxhash64("_s").alias("_h0"),
-            F.xxhash64("_s", F.lit(1)).alias("_h1"),
-        )
-    elif hasher == "md5":
-        ex = ex.withColumn("_m", F.md5("_s")).select(
-            "_id",
-            F.expr(_md5_word_expr("_m", 0)).alias("_h0"),
-            F.expr(_md5_word_expr("_m", 16)).alias("_h1"),
-        )
-    else:
-        raise ValueError(f"unknown hasher {hasher!r}")
+    ex = ex.withColumn("_m", F.md5("_s")).select(
+        "_id",
+        F.expr(_md5_word_expr("_m", 0)).alias("_h0"),
+        F.expr(_md5_word_expr("_m", 16)).alias("_h1"),
+    )
     # expressions built as SQL strings: ONE py4j/parse round trip each —
     # assembling a 128-term tree with Column operators costs ~1000 py4j
     # calls and dominated wall time (2.7 s of pure driver-side tree build)
@@ -613,7 +591,6 @@ def simhash_dedup(
     max_hamming: int = 3,
     ngram: int = 2,
     max_bucket: int | None = DEFAULT_MAX_BUCKET,
-    hasher: str = "xxhash64",
 ) -> DataFrame:
     """Near-dup pairs by 128-bit SimHash: banded candidates
     (simhash_candidates — hamming ≤ 3 pairs are direct candidates via
@@ -632,7 +609,7 @@ def simhash_dedup(
     ``max_bucket=None`` when pair-level exactness is required (the
     externally-oracled md5 registry query does). Output:
     (id_a, id_b, hamming)."""
-    sigs = simhash_signatures(df, id_col, text_col, ngram, hasher=hasher)
+    sigs = simhash_signatures(df, id_col, text_col, ngram)
     cands = simhash_candidates(sigs, max_bucket)
     return cands.select(
         "id_a",
@@ -695,7 +672,7 @@ def embedding_near_dup_pairs(
 ) -> DataFrame:
     """Cosine ≥ threshold pairs (id_a, id_b, cos_sim). Exact within a block;
     LSH-bucketed variant in operators.similarity for corpus scale. A block
-    larger than ``max_block`` rows raises (see _guard_exact_block) rather
+    larger than ``max_block`` rows raises (see _blocked_pairs) rather
     than silently running an O(n²) join. NOTE: with ``max_block`` set
     (the default), construction is EAGER — the guard runs one Spark count
     job at call time, so this function is not a purely lazy plan builder;
@@ -708,32 +685,15 @@ def embedding_near_dup_pairs(
         )
     from combinedfeatureextraction_spark.functions.arrays import cosine
 
-    cols = [F.col(id_col), F.col(vec_col)] + (
-        [F.col(block_col)] if block_col else []
-    )
     # spread the quadratic pair work over the partition budget — a
     # single-file scan otherwise leaves the non-broadcast join side (and
     # thus ALL pair evaluation) on one task
     n_part = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    v = df.select(*cols).repartition(n_part)
-    _guard_exact_block(
-        v, block_col, max_block, "embedding_near_dup_pairs",
+    v = df.select(
+        F.col(id_col), F.col(vec_col), *([F.col(block_col)] if block_col else [])
+    ).repartition(n_part)
+    return _blocked_pairs(
+        v, id_col, vec_col, block_col, max_block, cosine, "cos_sim",
+        threshold, "embedding_near_dup_pairs",
         "similarity.lsh_topk / similarity.ivf_topk",
-    )
-    a = v.select(
-        F.col(id_col).alias("id_a"), F.col(vec_col).alias("_va"),
-        *([F.col(block_col).alias("_blk")] if block_col else []),
-    )
-    b = v.select(
-        F.col(id_col).alias("id_b"), F.col(vec_col).alias("_vb"),
-        *([F.col(block_col).alias("_blkb")] if block_col else []),
-    )
-    cond = F.col("id_a") < F.col("id_b")
-    if block_col:
-        cond = cond & (F.col("_blk") == F.col("_blkb"))
-    return (
-        a.join(b, cond)
-        .withColumn("cos_sim", cosine(F.col("_va"), F.col("_vb")))
-        .filter(F.col("cos_sim") >= threshold)
-        .select("id_a", "id_b", "cos_sim")
     )

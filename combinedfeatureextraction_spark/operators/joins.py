@@ -5,10 +5,9 @@ Reference analogs (SURVEY.md §2.3):
    (json_to_xml.py:10-50) → broadcast hash join on a normalized key.
  - J2 bbox interval-overlap: region kept iff min/max bbox overlaps the
    query window (xml_to_mask_minmax.py:142) → equi-join on the entity key
-   + range predicate, letting AQE pick broadcast when the interval side is
-   small. At 100 TB the interval side (dim table) is ~always broadcastable;
-   if not, the equi part of the predicate keeps it a sort-merge join with
-   the range as a post-filter — never a cartesian product.
+   + range predicate with the interval side broadcast (a dim table, ~always
+   broadcastable at 100 TB); the equi part of the predicate keeps it a
+   hash join with the range as a post-filter — never a cartesian product.
 """
 
 from __future__ import annotations
@@ -39,7 +38,6 @@ def interval_overlap_join(
     start: str,
     end: str,
     how: str = "inner",
-    broadcast_intervals: bool = True,
 ) -> DataFrame:
     """Rows of ``probe`` matched to interval rows with
     start <= probe_ts < end for the same key (J2 bbox-overlap analog)."""
@@ -49,7 +47,6 @@ def interval_overlap_join(
     cond = cond & (probe[probe_ts] >= intervals[start]) & (
         probe[probe_ts] < intervals[end]
     )
-    right = F.broadcast(intervals) if broadcast_intervals else intervals
-    joined = probe.join(right, cond, how)
+    joined = probe.join(F.broadcast(intervals), cond, how)
     # drop duplicate key columns from the interval side
     return joined.drop(*[intervals[k] for k in keys])

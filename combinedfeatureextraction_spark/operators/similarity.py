@@ -1,59 +1,39 @@
-"""Approximate-nearest-neighbor similarity search over embedding columns.
+"""Nearest-neighbor search over embedding columns.
 
-Two tiers:
  - ``brute_force_topk``: exact cosine top-k. The query side is broadcast
    (queries ≪ corpus always at 100 TB), so the corpus never shuffles —
    one scan, per-partition partial top-k via the window, AQE-coalesced.
- - ``lsh_topk``: random-hyperplane LSH. Hyperplanes are generated
-   driver-side from a fixed seed; signatures for ALL tables are computed
-   in one Arrow-batched numpy matmul per batch (see _bucket_udf for why
-   not column expressions); candidates = same bucket in ≥1 of ``tables``
-   hash tables; exact cosine re-rank inside buckets. Corpus is scanned
-   once and shuffles only (id, table, bucket) tuples.
+ - ``lsh_topk`` (random-hyperplane LSH) and ``ivf_topk`` (coarse kmeans
+   quantizer) are the two approximate tiers. They differ only in how a
+   vector becomes a list of long keys: LSH packs the hyperplane sign bits
+   of each of ``tables`` hash tables, IVF names the nearest coarse
+   centroids. Both compute their keys in ``_vector_keys`` (one
+   Arrow-batched numpy matmul per batch) and hand the key rows to
+   ``_rerank``: corpus and query ids sharing a key are candidates,
+   re-ranked by exact cosine. The corpus is scanned twice and never
+   shuffled; every join is broadcast (the small-query contract), so the
+   only exchanges carry candidate-sized data.
 
 This is the engine's IVF/LSH "scale path" (task brief): recall tunable via
-(bits, tables), exactness recovered as bits→0.
+(bits, tables) or (n_lists, nprobe), exactness recovered as bits→0 or
+nprobe→n_lists.
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
 from combinedfeatureextraction_spark.functions.arrays import cosine, cosine_fixed
 
 
-def _bc(df: DataFrame, broadcast: bool) -> DataFrame:
-    """Explicit broadcast hint under the small-query contract; identity
-    (shuffle equi-join, AQE-planned) on the large-query fallback path."""
-    return F.broadcast(df) if broadcast else df
-
-
-def brute_force_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str,
-    vec_col: str,
-    query_id_col: str = "query_id",
-    k: int = 10,
-    dim: int | None = None,
-) -> DataFrame:
-    """Exact top-k by cosine per query. Output: (query_id, id, cos_sim,
-    rank). Deterministic tie-break on corpus id. Pass ``dim`` to use the
-    unrolled codegen cosine (hot-path form; identical values)."""
-    q = queries.select(
-        F.col(query_id_col), F.col(vec_col).alias("_qvec")
-    )
-    cos = (
-        cosine_fixed(vec_col, "_qvec", dim)
-        if dim
-        else cosine(F.col(vec_col), F.col("_qvec"))
-    )
-    scored = corpus.join(F.broadcast(q)).withColumn("cos_sim", cos)
+def _topk(scored: DataFrame, id_col: str, query_id_col: str, k: int) -> DataFrame:
+    """The ``k`` best ``cos_sim`` rows per query, ranked; deterministic
+    tie-break on corpus id."""
     w = Window.partitionBy(query_id_col).orderBy(
         F.col("cos_sim").desc(), F.col(id_col).asc()
     )
@@ -64,15 +44,38 @@ def brute_force_topk(
     )
 
 
-def _hyperplanes(dim: int, bits: int, tables: int, seed: int) -> np.ndarray:
-    rng = np.random.default_rng(seed)
-    return rng.standard_normal((tables, bits, dim))
+def brute_force_topk(
+    corpus: DataFrame,
+    queries: DataFrame,
+    id_col: str,
+    vec_col: str,
+    query_id_col: str = "query_id",
+    k: int = 10,
+) -> DataFrame:
+    """Exact top-k by cosine per query. Output: (query_id, id, cos_sim,
+    rank). Deterministic tie-break on corpus id."""
+    q = queries.select(
+        F.col(query_id_col), F.col(vec_col).alias("_qvec")
+    )
+    scored = corpus.join(F.broadcast(q)).withColumn(
+        "cos_sim", cosine(F.col(vec_col), F.col("_qvec"))
+    )
+    return _topk(scored, id_col, query_id_col, k)
 
 
-def _bucket_map(planes: np.ndarray, id_col: str, vec_col: str):
-    """mapInArrow function: (id, vec) batches → (id, vec, _bkts array<long>)
-    with one numpy matmul per batch: (batch, dim) @ (dim, tables·bits),
-    sign bits packed per table.
+def _vector_keys(
+    df: DataFrame,
+    idc: str,
+    vec_col: str,
+    dim: int,
+    out_col: str,
+    keys_of: Callable[[np.ndarray], np.ndarray],
+    op: str,
+) -> DataFrame:
+    """(id, vec) → (id, ``out_col`` array<long>) through one mapInArrow:
+    each batch's vectors become one (n, ``dim``) float64 matrix and
+    ``keys_of`` maps it to an (n, w) integer key matrix. A batch whose
+    vectors do not all hold ``dim`` values raises ``ValueError``.
 
     Why mapInArrow and not column expressions or a pandas UDF: the
     per-plane dot product as literal arithmetic is tables·bits·dim
@@ -82,41 +85,77 @@ def _bucket_map(planes: np.ndarray, id_col: str, vec_col: str):
     cores → 16 s at 32): Arrow→pandas materializes one numpy object PER
     ROW for a list column, and 32 workers allocating 2M small arrays
     contend on the allocator. mapInArrow reads the ListArray's contiguous
-    values buffer and reshapes it (zero per-row objects); the id and vec
-    columns pass through untouched Arrow buffers."""
+    values buffer and reshapes it (zero per-row objects); the id column
+    passes through as its untouched Arrow buffer."""
     import pyarrow as pa
-
-    tables, bits, dim = planes.shape
-    flat = planes.reshape(tables * bits, dim).T.copy()  # (dim, tables·bits)
-    weights = (2 ** np.arange(bits, dtype=np.int64)).reshape(1, 1, bits)
 
     def run(batches):
         for b in batches:
             n = b.num_rows
             if n == 0:
                 continue
-            vec = b.column(1)
-            vals = pa.compute.list_flatten(vec).to_numpy(zero_copy_only=False)
+            vals = pa.compute.list_flatten(b.column(1)).to_numpy(
+                zero_copy_only=False
+            )
             if len(vals) != n * dim:
                 raise ValueError(
-                    f"lsh bucketize: expected fixed dim {dim}, got "
+                    f"{op}: expected fixed dim {dim}, got "
                     f"{len(vals)} values for {n} rows"
                 )
-            d = vals.reshape(n, dim).astype(np.float64, copy=False) @ flat
-            sig = ((d >= 0).reshape(n, tables, bits) * weights).sum(axis=2)
-            offsets = pa.array(
-                np.arange(0, (n + 1) * tables, tables, dtype=np.int32)
+            keys = keys_of(vals.reshape(n, dim).astype(np.float64, copy=False))
+            w = keys.shape[1]
+            offsets = pa.array(np.arange(0, (n + 1) * w, w, dtype=np.int32))
+            lists = pa.ListArray.from_arrays(
+                offsets, pa.array(keys.ravel().astype(np.int64))
             )
-            bkts = pa.ListArray.from_arrays(
-                offsets, pa.array(sig.ravel().astype(np.int64))
-            )
-            # only (id, buckets) goes back out — re-serializing the vector
+            # only (id, keys) goes back out — re-serializing the vector
             # column through Arrow doubled the Python-boundary traffic
             yield pa.RecordBatch.from_arrays(
-                [b.column(0), bkts], names=[id_col, "_bkts"]
+                [b.column(0), lists], names=[idc, out_col]
             )
 
-    return run
+    narrow = df.select(F.col(idc), F.col(vec_col))
+    id_t = narrow.schema[idc].dataType.simpleString()
+    return narrow.mapInArrow(run, f"{idc} {id_t}, {out_col} array<long>")
+
+
+def _rerank(
+    corpus: DataFrame,
+    queries: DataFrame,
+    corpus_keys: DataFrame,
+    query_keys: DataFrame,
+    on: list[str],
+    id_col: str,
+    vec_col: str,
+    query_id_col: str,
+    k: int,
+    dim: int,
+) -> DataFrame:
+    """Candidates → exact top-k: (query, corpus) id pairs sharing a key
+    ``on``; the candidate vectors fetched by a broadcast semi-join on the
+    candidate-id set (corpus scan #2, no shuffle); exact cosine against
+    the query vector; the top-k window."""
+    pairs = (
+        corpus_keys.join(F.broadcast(query_keys), on)
+        .select(query_id_col, id_col)
+        .dropDuplicates([query_id_col, id_col])
+    )
+    cand_ids = pairs.select(id_col).distinct()
+    cand_vecs = corpus.select(id_col, vec_col).join(
+        F.broadcast(cand_ids), id_col, "left_semi"
+    )
+    q = queries.select(F.col(query_id_col), F.col(vec_col).alias("_qvec"))
+    scored = (
+        cand_vecs.join(F.broadcast(pairs), id_col)
+        .join(F.broadcast(q), query_id_col)
+        .withColumn("cos_sim", cosine_fixed(vec_col, "_qvec", dim))
+    )
+    return _topk(scored, id_col, query_id_col, k)
+
+
+def _hyperplanes(dim: int, bits: int, tables: int, seed: int) -> np.ndarray:
+    rng = np.random.default_rng(seed)
+    return rng.standard_normal((tables, bits, dim))
 
 
 def _kmeans_centroids(
@@ -141,35 +180,6 @@ def _kmeans_centroids(
     return cents / norms
 
 
-def _ivf_assign_map(cents: np.ndarray, id_col: str, nprobe: int):
-    """mapInArrow: (id, vec) → (id, _lists array<long>) — the nprobe
-    nearest coarse centroids per vector (one matmul per batch)."""
-    import pyarrow as pa
-
-    n_lists, dim = cents.shape
-    centsT = cents.T.copy()
-
-    def run(batches):
-        for b in batches:
-            n = b.num_rows
-            if n == 0:
-                continue
-            vals = pa.compute.list_flatten(b.column(1)).to_numpy(
-                zero_copy_only=False
-            )
-            m = vals.reshape(n, dim).astype(np.float64, copy=False)
-            d = m @ centsT  # (n, n_lists)
-            k = min(nprobe, n_lists)
-            top = np.argpartition(-d, k - 1, axis=1)[:, :k].astype(np.int64)
-            offsets = pa.array(np.arange(0, (n + 1) * k, k, dtype=np.int32))
-            lists = pa.ListArray.from_arrays(offsets, pa.array(top.ravel()))
-            yield pa.RecordBatch.from_arrays(
-                [b.column(0), lists], names=[id_col, "_lists"]
-            )
-
-    return run
-
-
 def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -183,7 +193,6 @@ def ivf_topk(
     seed: int = 42,
     train_sample: int = 10_000,
     kmeans_iters: int = 5,
-    broadcast_queries: bool = True,
 ) -> DataFrame:
     """IVF approximate top-k — the inverted-file scale path beside LSH:
     a coarse kmeans quantizer (trained driver-side on a bounded sample)
@@ -193,16 +202,7 @@ def ivf_topk(
     Plan shape mirrors lsh_topk: corpus scanned twice, shuffled never
     (assignment via mapInArrow matmul emitting (id, lists); candidate
     vectors fetched by broadcast semi-join); recall is tuned by
-    (n_lists, nprobe), exactness recovered as nprobe→n_lists.
-
-    ``broadcast_queries`` is the SMALL-QUERY-SET contract made explicit:
-    the default broadcasts the query buckets, pairs and vectors (all
-    bounded by n_queries × nprobe × list size). When the probe set is
-    too large to broadcast, pass False: every join becomes a shuffle
-    equi-join (AQE-planned) — the assignment maps still emit only
-    (id, list) tuples, and the only corpus-payload exchange is the
-    candidate-subset fetch, which is unavoidable once neither side
-    fits a broadcast. Identical results either way (pytest-pinned)."""
+    (n_lists, nprobe), exactness recovered as nprobe→n_lists."""
     # bounded driver-side training sample: limit() takes the first rows in
     # scan order — deterministic for a fixed file layout (FAISS-style
     # train-on-head); centroids only steer recall, never correctness (the
@@ -214,40 +214,22 @@ def ivf_topk(
     norms = np.linalg.norm(sample, axis=1, keepdims=True)
     norms[norms == 0] = 1.0
     cents = _kmeans_centroids(sample / norms, n_lists, kmeans_iters, seed)
+    centsT = cents.T.copy()
 
     def assign(df: DataFrame, idc: str, probes: int) -> DataFrame:
-        narrow = df.select(F.col(idc), F.col(vec_col))
-        id_t = narrow.schema[idc].dataType.simpleString()
-        mapped = narrow.mapInArrow(
-            _ivf_assign_map(cents, idc, probes),
-            f"{idc} {id_t}, _lists array<long>",
+        # the ``probes`` nearest coarse centroids per vector
+        p = min(probes, len(cents))
+        mapped = _vector_keys(
+            df, idc, vec_col, dim, "_lists",
+            lambda m: np.argpartition(-(m @ centsT), p - 1, axis=1)[:, :p],
+            "ivf_topk",
         )
         return mapped.select(idc, F.explode("_lists").alias("_list"))
 
     cb = assign(corpus, id_col, 1)  # corpus rows live in ONE list
     qb = assign(queries, query_id_col, nprobe)
-    pairs = (
-        cb.join(_bc(qb, broadcast_queries), "_list")
-        .select(query_id_col, id_col)
-        .dropDuplicates([query_id_col, id_col])
-    )
-    cand_ids = pairs.select(id_col).distinct()
-    cand_vecs = corpus.select(id_col, vec_col).join(
-        _bc(cand_ids, broadcast_queries), id_col, "left_semi"
-    )
-    q = queries.select(F.col(query_id_col), F.col(vec_col).alias("_qvec"))
-    scored = (
-        cand_vecs.join(_bc(pairs, broadcast_queries), id_col)
-        .join(_bc(q, broadcast_queries), query_id_col)
-        .withColumn("cos_sim", cosine_fixed(vec_col, "_qvec", dim))
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cos_sim").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "cos_sim", "rank")
+    return _rerank(
+        corpus, queries, cb, qb, ["_list"], id_col, vec_col, query_id_col, k, dim
     )
 
 
@@ -262,7 +244,6 @@ def lsh_topk(
     tables: int = 4,
     dim: int = 64,
     seed: int = 42,
-    broadcast_queries: bool = True,
 ) -> DataFrame:
     """Approximate top-k: candidates share an LSH bucket with the query in
     any table; exact cosine re-rank among candidates. Same output schema
@@ -273,54 +254,28 @@ def lsh_topk(
     (id, buckets), once to fetch the (few) candidate vectors via a
     BROADCAST semi-join on the candidate-id set. Every join is broadcast;
     the only exchanges carry candidate-sized data (ids, pairs, the final
-    re-rank window).
-
-    ``broadcast_queries=False`` is the LARGE-probe-set fallback: when
-    the query side (and so the pair/candidate sets) outgrows a
-    broadcast, every join becomes a shuffle equi-join (AQE-planned) —
-    bucket tuples shuffle by (_tbl, _bkt), and the only corpus-payload
-    exchange is the candidate-subset fetch, unavoidable once neither
-    join side fits a broadcast. Identical results either way
-    (pytest-pinned)."""
+    re-rank window)."""
     planes = _hyperplanes(dim, bits, tables, seed)
+    flat = planes.reshape(tables * bits, dim).T.copy()  # (dim, tables·bits)
+    weights = 2 ** np.arange(bits, dtype=np.int64)
+
+    def signs(m: np.ndarray) -> np.ndarray:
+        # all tables in one matmul: (batch, dim) @ (dim, tables·bits),
+        # sign bits packed per table
+        return ((m @ flat >= 0).reshape(len(m), tables, bits) * weights).sum(axis=2)
 
     def bucketize(df: DataFrame, idc: str) -> DataFrame:
-        # ONE scan: all table buckets in one Arrow-batched matmul, then
-        # posexplode — a per-table unionByName would re-scan (and
-        # re-decode) the corpus `tables` times.
-        narrow = df.select(F.col(idc), F.col(vec_col))
-        id_t = narrow.schema[idc].dataType.simpleString()
-        mapped = narrow.mapInArrow(
-            _bucket_map(planes, idc, vec_col),
-            f"{idc} {id_t}, _bkts array<long>",
-        )
+        # ONE scan: all table buckets per batch, then posexplode — a
+        # per-table unionByName would re-scan (and re-decode) the corpus
+        # `tables` times.
+        mapped = _vector_keys(df, idc, vec_col, dim, "_bkts", signs, "lsh bucketize")
         return mapped.select(idc, F.posexplode("_bkts")).withColumnsRenamed(
             {"pos": "_tbl", "col": "_bkt"}
         )
 
     cb = bucketize(corpus, id_col)
     qb = bucketize(queries, query_id_col)
-    pairs = (
-        cb.join(_bc(qb, broadcast_queries), ["_tbl", "_bkt"])
-        .select(query_id_col, id_col)
-        .dropDuplicates([query_id_col, id_col])
-    )
-    # candidate vectors: broadcast semi-join — corpus scan #2, no shuffle
-    cand_ids = pairs.select(id_col).distinct()
-    cand_vecs = corpus.select(id_col, vec_col).join(
-        _bc(cand_ids, broadcast_queries), id_col, "left_semi"
-    )
-    q = queries.select(F.col(query_id_col), F.col(vec_col).alias("_qvec"))
-    scored = (
-        cand_vecs.join(_bc(pairs, broadcast_queries), id_col)
-        .join(_bc(q, broadcast_queries), query_id_col)
-        .withColumn("cos_sim", cosine_fixed(vec_col, "_qvec", dim))
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cos_sim").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "cos_sim", "rank")
+    return _rerank(
+        corpus, queries, cb, qb, ["_tbl", "_bkt"], id_col, vec_col,
+        query_id_col, k, dim,
     )

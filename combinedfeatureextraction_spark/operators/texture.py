@@ -49,14 +49,13 @@ def glcm_pairs(
     level: str,
     keys: Sequence[str],
     order: Sequence[str],
-    symmetric: bool = True,
     offset: int = 1,
 ) -> DataFrame:
-    """(entity, i, j) offset-``offset`` neighbor pairs; symmetric doubles
-    each pair with its mirror — exactly ``graycomatrix(..., [offset],
-    symmetric=True)`` (the reference fixes offset=1; skimage generalizes
-    to a distance list — call once per distance, the window sort is shared
-    by Catalyst when composed in one plan)."""
+    """(entity, i, j) offset-``offset`` neighbor pairs, each doubled with
+    its mirror — exactly ``graycomatrix(..., [offset], symmetric=True)``
+    (the reference fixes offset=1; skimage generalizes to a distance list
+    — call once per distance, the window sort is shared by Catalyst when
+    composed in one plan)."""
     w = Window.partitionBy(*keys).orderBy(*order)
     pr = (
         df.select(
@@ -66,8 +65,6 @@ def glcm_pairs(
         )
         .filter(F.col("_i").isNotNull())
     )
-    if not symmetric:
-        return pr.select(*keys, F.col("_i").alias("i"), F.col("_j").alias("j"))
     return pr.select(
         *keys,
         F.explode(
@@ -84,7 +81,6 @@ def glcm_texture(
     level: str,
     keys: Sequence[str],
     order: Sequence[str],
-    symmetric: bool = True,
     offset: int = 1,
 ) -> DataFrame:
     """Per-entity GLCM texture stats from an integer level column.
@@ -95,7 +91,7 @@ def glcm_texture(
     reference's empty-compartment skip (:516-517 zero-fills only NaN stats
     of *present* compartments).
     """
-    pairs = glcm_pairs(df, level, keys, order, symmetric=symmetric, offset=offset)
+    pairs = glcm_pairs(df, level, keys, order, offset=offset)
     hist = pairs.groupBy(*keys, "i", "j").agg(F.count("*").alias("c"))
 
     # products in decimal(38,0) INSIDE the aggregate: c*c in long would

@@ -20,13 +20,12 @@ def global_quantile_threshold(
     df: DataFrame,
     value: str,
     q: float = 0.5,
-    exact: bool = True,
 ) -> float:
-    """Pass 1: one global scalar (exact median by default — matching the
-    deterministic oracle; percentile_approx at 100 TB)."""
-    expr = F.median(F.col(value)) if (exact and q == 0.5) else (
-        F.expr(f"percentile({value}, {q})") if exact
-        else F.percentile_approx(F.col(value), q, 10000)
+    """Pass 1: one global scalar, the exact ``q`` quantile (matching the
+    deterministic oracle)."""
+    expr = (
+        F.median(F.col(value)) if q == 0.5
+        else F.expr(f"percentile({value}, {q})")
     )
     return float(df.agg(expr.alias("t")).collect()[0]["t"])
 

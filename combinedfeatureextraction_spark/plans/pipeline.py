@@ -40,9 +40,6 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 
-from combinedfeatureextraction_spark.operators.aggregates import (
-    six_stat_hierarchy,
-)
 from combinedfeatureextraction_spark.operators.asof import asof_join
 from combinedfeatureextraction_spark.operators.fill import (
     distance_to_boundary_sql,
@@ -174,10 +171,3 @@ def rowlevel_features(
     if states is not None:
         phase2["state_ffill"] = forward_fill_sql("asof_state_val", keys, "ts")
     return with_sql_columns(df, phase2)
-
-
-def hierarchy_aggregates(features: DataFrame) -> DataFrame:
-    """Per-(doc) and per-(doc, source) 6-stat rollup of the row features —
-    the A1×A2-A5 two-level hierarchy in one GROUPING SETS pass."""
-    numeric = ["n_tok", "gap_prev", "dist_to_boundary"]
-    return six_stat_hierarchy(features, numeric, "doc_id", "source")

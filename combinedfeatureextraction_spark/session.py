@@ -8,6 +8,7 @@ one you'd set on a 1000-executor cluster; only ``master`` changes.
 from __future__ import annotations
 
 import os
+import shlex
 
 from pyspark.sql import SparkSession
 
@@ -37,6 +38,16 @@ def _local_dir() -> str | None:
     return "/dev/shm/cfe_spark_local"
 
 
+def _submitted_master() -> bool:
+    """Whether spark-submit holds the master: it started this driver (its
+    JVM is up and ``PYSPARK_GATEWAY_PORT`` names it) or pyspark will start
+    the JVM with ``PYSPARK_SUBMIT_ARGS`` that name one."""
+    if os.environ.get("PYSPARK_GATEWAY_PORT"):
+        return True
+    args = shlex.split(os.environ.get("PYSPARK_SUBMIT_ARGS", ""))
+    return any(a == "--master" or a.startswith("--master=") for a in args)
+
+
 def get_spark(
     app_name: str = "cfe_spark",
     cpus: int | None = None,
@@ -45,10 +56,16 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession tuned for the engine.
 
-    ``cpus=None`` → ``local[$SPARK_GRAFT_CPUS or *]``. On a real cluster the
-    caller passes master/deploy-mode via spark-submit and this function only
-    layers the SQL confs (builder configs are no-ops when a session exists).
+    ``cpus=None`` → ``local[$SPARK_GRAFT_CPUS or *]``, unless spark-submit
+    already set the master: a driver started by spark-submit, or a
+    ``--master`` in ``PYSPARK_SUBMIT_ARGS``, keeps its master and this
+    function only layers the confs. A session that already exists is
+    returned as it is: the builder would reset its runtime confs (shuffle
+    partitions) under the code that built it.
     """
+    active = SparkSession.getActiveSession()
+    if active is not None:
+        return active
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or None
     master = f"local[{cpus}]" if cpus else "local[*]"
@@ -56,8 +73,7 @@ def get_spark(
         os.environ.get("CFE_SHUFFLE_PARTITIONS", DEFAULT_SHUFFLE_PARTITIONS)
     )
     b = (
-        SparkSession.builder.master(master)
-        .appName(app_name)
+        SparkSession.builder.appName(app_name)
         # match partition count to parallelism, not the 200 default
         .config("spark.sql.shuffle.partitions", str(sp))
         # scan split size (guide §6). The 128 MB default packs a whole
@@ -106,6 +122,8 @@ def get_spark(
         # filesystems); parquet pages keep their own CRC.
         .config("spark.hadoop.fs.file.impl", "org.apache.hadoop.fs.RawLocalFileSystem")
     )
+    if not _submitted_master():
+        b = b.master(master)
     local_dir = _local_dir()
     if local_dir:
         os.makedirs(local_dir, exist_ok=True)

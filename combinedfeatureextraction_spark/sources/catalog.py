@@ -145,7 +145,10 @@ def write_snapshot(
                 f" snapshot {parent!r} under {path}; rewrite the table with"
                 ' mode="overwrite"'
             )
-    seq = len(list_snapshots(path))
+    # the parent's number plus one: a count of the manifests on disk
+    # would repeat numbers once expire_snapshots has deleted some, and
+    # list_snapshots (sorted by id) would no longer follow commit order
+    seq = int(parent.split("-", 1)[0]) + 1 if parent else 0
     snap_id = f"{seq:06d}-{uuid.uuid4().hex[:10]}"
     # ONE sort, partition columns first: the planned write requires its
     # partition columns as the leading order and would otherwise replace a

@@ -41,8 +41,6 @@ def main() -> None:
     ap.add_argument("--buckets", type=int, default=32)
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
-
     from combinedfeatureextraction_spark.operators.packing import pack_tokens
     from combinedfeatureextraction_spark.operators.sampling import (
         deterministic_sample,
@@ -52,8 +50,9 @@ def main() -> None:
         with_bucket,
         write_snapshot,
     )
+    from combinedfeatureextraction_spark.session import get_spark
 
-    spark = SparkSession.builder.appName("cfe_curate").getOrCreate()
+    spark = get_spark(app_name="cfe_curate")
     docs = spark.read.parquet(args.docs)
     n_in = docs.count()
     if args.sample_fraction < 1.0:

@@ -38,8 +38,6 @@ def main() -> None:
                     help="emit the narrow feature table (100 TB shape)")
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
-
     from combinedfeatureextraction_spark.plans.manifest import ResumableRun
     from combinedfeatureextraction_spark.plans.pipeline import rowlevel_features
     from combinedfeatureextraction_spark.sources.catalog import (
@@ -47,8 +45,9 @@ def main() -> None:
         with_bucket,
         write_snapshot,
     )
+    from combinedfeatureextraction_spark.session import get_spark
 
-    spark = SparkSession.builder.appName("cfe_materialize").getOrCreate()
+    spark = get_spark(app_name="cfe_materialize")
     seqs = spark.read.parquet(args.sequences)
     states = spark.read.parquet(args.states) if args.states else None
 

@@ -22,16 +22,16 @@ print('packaged', '$ZIP')
 ")
 
 MASTER="${SPARK_MASTER:-local[${SPARK_GRAFT_CPUS:-*}]}"
-# local mode: the driver JVM runs the executors — size it like get_spark
-# does (spark-submit's 1g default OOMs the 23M-row window sort); file://
-# output skips the .crc sidecars as in get_spark (session.py says why)
+# The jobs build their session with session.get_spark, which keeps this
+# master and sets the other confs. Two must be given here, because the
+# driver JVM is already running when get_spark is called: the driver
+# memory (in local mode that JVM runs the executors too; spark-submit's
+# 1g default OOMs the 23M-row window sort), and the file:// filesystem
+# without .crc sidecars (session.py says why), since spark-submit caches
+# the local filesystem before get_spark's conf arrives.
 exec spark-submit \
   --master "$MASTER" \
   --driver-memory "${CFE_DRIVER_MEM:-8g}" \
-  --conf spark.sql.shuffle.partitions="${CFE_SHUFFLE_PARTITIONS:-32}" \
-  --conf spark.sql.adaptive.enabled=true \
-  --conf spark.sql.execution.arrow.pyspark.enabled=true \
-  --conf spark.sql.session.timeZone=UTC \
   --conf spark.hadoop.fs.file.impl=org.apache.hadoop.fs.RawLocalFileSystem \
   --py-files "$ZIP" \
   "$JOB" "$@"

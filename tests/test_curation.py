@@ -65,7 +65,10 @@ def test_curate_corpus_job_end_to_end(spark, tmp_path, monkeypatch):
     ])
     printed = []
     monkeypatch.setattr("builtins.print", lambda s: printed.append(s))
+    partitions = spark.conf.get("spark.sql.shuffle.partitions")
     job.main()
+    # the job reuses the running session without resetting its confs
+    assert spark.conf.get("spark.sql.shuffle.partitions") == partitions
     summary = json.loads(printed[-1])
     assert summary["docs_in"] > 0
     back = read_snapshot(spark, out)

@@ -329,22 +329,6 @@ def test_minhash_finds_planted_dup(spark):
     assert {(0, 100)} == set(zip(out["id_a"], out["id_b"]))
 
 
-def test_simhash_finds_planted_dup(spark):
-    """Exact duplicate (hamming 0 ≤ 3 — inside the pigeonhole guarantee)
-    must be found; unrelated random docs (hamming ~64 of 128) must not."""
-    from combinedfeatureextraction_spark.operators.dedup import simhash_dedup
-
-    rng = np.random.default_rng(17)
-    vocab = [f"w{i}" for i in range(1000)]
-    texts = [" ".join(rng.choice(vocab, 80)) for _ in range(30)]
-    rows = [(i, t) for i, t in enumerate(texts)]
-    rows.append((100, texts[0]))  # exact dup of doc 0
-    df = _df(spark, rows, "id long, t string")
-    out = simhash_dedup(df, "id", "t", max_hamming=3).toPandas()
-    assert set(zip(out["id_a"], out["id_b"])) == {(0, 100)}
-    assert out["hamming"].tolist() == [0]
-
-
 def test_simhash_md5_portability_contract(spark):
     """The md5 hasher's nibble→bit layout is the contract the DuckDB
     oracle replicates (nibble k bit b ↦ global bit (k//8)*32 +
@@ -378,19 +362,20 @@ def test_simhash_md5_portability_contract(spark):
 
 
 def test_simhash_md5_finds_planted_dup(spark):
-    """The portable-hash variant preserves the operator contract: exact
-    duplicate found at hamming 0, unrelated docs rejected."""
+    """Exact duplicate (hamming 0 ≤ 3 — inside the pigeonhole guarantee)
+    must be found; unrelated random docs (hamming ~64 of 128) must not."""
     from combinedfeatureextraction_spark.operators.dedup import simhash_dedup
 
-    rng = np.random.default_rng(23)
     vocab = [f"w{i}" for i in range(1000)]
-    texts = [" ".join(rng.choice(vocab, 80)) for _ in range(20)]
-    rows = [(i, t) for i, t in enumerate(texts)]
-    rows.append((100, texts[0]))
-    df = _df(spark, rows, "id long, t string")
-    out = simhash_dedup(df, "id", "t", max_hamming=3, hasher="md5").toPandas()
-    assert set(zip(out["id_a"], out["id_b"])) == {(0, 100)}
-    assert out["hamming"].tolist() == [0]
+    for seed, n_docs in ((17, 30), (23, 20)):
+        rng = np.random.default_rng(seed)
+        texts = [" ".join(rng.choice(vocab, 80)) for _ in range(n_docs)]
+        rows = [(i, t) for i, t in enumerate(texts)]
+        rows.append((100, texts[0]))  # exact dup of doc 0
+        df = _df(spark, rows, "id long, t string")
+        out = simhash_dedup(df, "id", "t", max_hamming=3).toPandas()
+        assert set(zip(out["id_a"], out["id_b"])) == {(0, 100)}
+        assert out["hamming"].tolist() == [0]
 
 
 def test_simhash_banding_pigeonhole(spark):
@@ -440,7 +425,7 @@ def test_degenerate_bucket_capped(spark):
     rows = [(i, "the same boilerplate text repeated for every document here")
             for i in range(n)]
     df = _df(spark, rows, "id long, t string")
-    sh = hashed_shingle_sets(df, "id", "t", n=3, persist=False)
+    sh = hashed_shingle_sets(df, "id", "t", n=3)
     cands = minhash_lsh_candidates_from_sets(sh, 32, 8)
     c = cands.count()
     assert c == n - 1  # star: every doc links to doc 0, nothing quadratic
@@ -499,7 +484,7 @@ def test_ivf_topk_recall(spark):
     q = df.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    exact = brute_force_topk(df, q, "vec_id", "embedding", k=5, dim=16).toPandas()
+    exact = brute_force_topk(df, q, "vec_id", "embedding", k=5).toPandas()
     full = ivf_topk(
         df, q, "vec_id", "embedding", k=5, n_lists=8, nprobe=8, dim=16
     ).toPandas()
@@ -660,53 +645,48 @@ def test_exact_tier_guard_trips_on_oversized_block(spark):
     ).count()
 
 
-def test_ann_large_query_fallback_matches_broadcast(spark):
-    """r03-verdict item 8: broadcast_queries=False must produce
-    identical results through shuffle equi-joins (the large-probe-set
-    path), and with the auto-broadcast threshold disabled its physical
-    plan must contain no broadcast join at all (proving no explicit
-    broadcast hint survives), while the default path keeps its
-    broadcast hints regardless of the threshold."""
+def _ann_inputs(spark, n=200, dim=16):
+    rng = np.random.default_rng(31)
+    vecs = rng.normal(size=(n, dim)).astype(np.float32)
+    pdf = pd.DataFrame({"vec_id": range(n), "embedding": list(map(list, vecs))})
+    df = spark.createDataFrame(pdf)
+    q = df.filter(F.col("vec_id") < 5).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    return df, q
+
+
+def test_ann_joins_broadcast_without_auto_threshold(spark):
+    """Every join of lsh_topk and ivf_topk carries an explicit broadcast
+    hint: with the auto-broadcast threshold disabled, their physical
+    plans still contain broadcast joins."""
     from combinedfeatureextraction_spark.operators.similarity import (
         ivf_topk,
         lsh_topk,
     )
 
-    rng = np.random.default_rng(31)
-    vecs = rng.normal(size=(200, 16)).astype(np.float32)
-    pdf = pd.DataFrame({"vec_id": range(200), "embedding": list(map(list, vecs))})
-    df = spark.createDataFrame(pdf)
-    q = df.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    key = ["query_id", "rank"]
-    cols = ["query_id", "vec_id", "rank"]
-    for op in (
-        lambda bq: lsh_topk(
-            df, q, "vec_id", "embedding", k=3, bits=4, tables=2, dim=16,
-            broadcast_queries=bq,
-        ),
-        lambda bq: ivf_topk(
-            df, q, "vec_id", "embedding", k=3, n_lists=8, nprobe=3, dim=16,
-            broadcast_queries=bq,
-        ),
-    ):
-        a = op(True).toPandas().sort_values(key)[cols].values.tolist()
-        b = op(False).toPandas().sort_values(key)[cols].values.tolist()
-        assert a == b
+    df, q = _ann_inputs(spark)
     thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        fb = lsh_topk(
-            df, q, "vec_id", "embedding", k=3, bits=4, tables=2, dim=16,
-            broadcast_queries=False,
-        )
-        plan_fb = fb._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastHashJoin" not in plan_fb
-        bc = lsh_topk(
-            df, q, "vec_id", "embedding", k=3, bits=4, tables=2, dim=16,
-        )
-        plan_bc = bc._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastHashJoin" in plan_bc
+        for out in (
+            lsh_topk(df, q, "vec_id", "embedding", k=3, bits=4, tables=2, dim=16),
+            ivf_topk(df, q, "vec_id", "embedding", k=3, n_lists=8, nprobe=3, dim=16),
+        ):
+            plan = out._jdf.queryExecution().executedPlan().toString()
+            assert "BroadcastHashJoin" in plan
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thr)
+
+
+@pytest.mark.parametrize("op", ["lsh_topk", "ivf_topk"])
+def test_ann_ragged_vector_raises_fixed_dim(spark, op):
+    """The (id, vector) → keys map checks the fixed dim for both ANN
+    operators: a query vector one value short raises ValueError."""
+    from combinedfeatureextraction_spark.operators import similarity
+
+    df, q = _ann_inputs(spark)
+    ragged = q.select("query_id", F.slice("embedding", 1, 15).alias("embedding"))
+    out = getattr(similarity, op)(df, ragged, "vec_id", "embedding", k=3, dim=16)
+    with pytest.raises(Exception, match="ValueError: .*expected fixed dim 16"):
+        out.collect()

@@ -172,13 +172,14 @@ def test_hierarchy_aggregates_nan_discipline(spark, seqs_df, states_df):
     """NaN/Inf→0 coalesce (FeatureExtractor.py:611-614): the aggregate
     output must never contain NaN/Inf — singleton groups give std 0, not
     NaN."""
-    from combinedfeatureextraction_spark.plans.pipeline import (
-        hierarchy_aggregates,
-        rowlevel_features,
+    from combinedfeatureextraction_spark.operators.aggregates import (
+        six_stat_hierarchy,
     )
+    from combinedfeatureextraction_spark.plans.pipeline import rowlevel_features
 
     feat = rowlevel_features(seqs_df, states_df)
-    agg = hierarchy_aggregates(feat).toPandas()
+    numeric = ["n_tok", "gap_prev", "dist_to_boundary"]
+    agg = six_stat_hierarchy(feat, numeric, "doc_id", "source").toPandas()
     num = agg.select_dtypes("number")
     assert np.isfinite(num.fillna(0).values).all()
     # gap_prev of single-row docs is all-null → its stats must be 0, not NaN

@@ -164,7 +164,7 @@ def test_minhash_expr_string_signatures_bit_identical(spark):
             ],
         })
     )
-    sh = D.hashed_shingle_sets(docs, "doc_id", "text", 3, persist=False)
+    sh = D.hashed_shingle_sets(docs, "doc_id", "text", 3)
     num_hashes, bands = 16, 4
     r = num_hashes // bands
 

@@ -172,6 +172,26 @@ def test_write_snapshot_files_sorted_within(spark, seqs_df, tmp_path):
         assert key == sorted(key), f.name
 
 
+def test_snapshot_numbers_follow_commits_after_expiry(spark, tmp_path):
+    """A snapshot is numbered from its parent, not from the manifests left
+    on disk: after an expiry the numbers keep rising, list_snapshots
+    follows commit order and the next expiry keeps the two newest
+    commits."""
+    from combinedfeatureextraction_spark.sources.catalog import (
+        expire_snapshots,
+        list_snapshots,
+    )
+
+    tbl = tmp_path / "tbl_seq"
+    df = spark.range(4).withColumnRenamed("id", "doc_id")
+    commits = [write_snapshot(df, tbl, partition_by=()) for _ in range(4)]
+    expire_snapshots(tbl, keep_last=2)
+    commits += [write_snapshot(df, tbl, partition_by=()) for _ in range(2)]
+    assert list_snapshots(tbl) == commits[2:]
+    expire_snapshots(tbl, keep_last=2)
+    assert list_snapshots(tbl) == commits[-2:]
+
+
 def test_expire_snapshots(spark, seqs_df, tmp_path):
     """Vacuum: unreferenced snapshots are deleted; retained snapshots keep
     time-traveling correctly, including data inherited from ancestors."""

@@ -1,6 +1,7 @@
 """``session.get_spark``: Python workers import the engine wherever the
 driver runs from; local files carry no checksum sidecars; Spark's scratch
-goes to /dev/shm only when it has room."""
+goes to /dev/shm only when it has room; a master given to spark-submit is
+kept; the jobs build their session with it."""
 
 from __future__ import annotations
 
@@ -69,3 +70,49 @@ def test_local_dir_needs_free_shm(monkeypatch):
         assert session._local_dir() == want, free
     monkeypatch.setenv("CFE_SPARK_LOCAL_DIR", "/elsewhere")
     assert session._local_dir() == "/elsewhere"
+
+
+def _plain_env(**extra):
+    env = {k: v for k, v in os.environ.items()
+           if k not in ("PYSPARK_SUBMIT_ARGS", "PYSPARK_GATEWAY_PORT",
+                        "CFE_SHUFFLE_PARTITIONS")}
+    return {**env, "PYTHONPATH": str(ROOT), **extra}
+
+
+def test_submit_args_master_is_kept(tmp_path):
+    """A ``--master`` in ``PYSPARK_SUBMIT_ARGS`` wins over ``cpus``."""
+    script = tmp_path / "driver.py"
+    script.write_text(textwrap.dedent("""
+        from combinedfeatureextraction_spark.session import get_spark
+
+        spark = get_spark(cpus=1)
+        print(spark.sparkContext.master)
+        spark.stop()
+    """))
+    env = _plain_env(PYSPARK_SUBMIT_ARGS="--master local[3] pyspark-shell")
+    res = subprocess.run([sys.executable, str(script)], cwd=tmp_path, env=env,
+                         capture_output=True, text=True, timeout=300)
+    assert res.returncode == 0, res.stderr[-3000:]
+    assert res.stdout.strip().splitlines()[-1] == "local[3]"
+
+
+def test_materialize_job_run_with_python_writes_one_file_per_bucket(
+    spark, tmp_path
+):
+    """``jobs/materialize_features.py`` run with plain ``python`` gets
+    ``get_spark``'s session: 32 shuffle partitions, so each of 32 buckets
+    is one parquet file, and no ``.crc`` sidecars."""
+    from combinedfeatureextraction_spark.sources.fixtures import sequences_spark
+
+    seqs = str(tmp_path / "seqs")
+    sequences_spark(spark, 200, seed=7).write.parquet(seqs)
+    out = tmp_path / "feat"
+    res = subprocess.run(
+        [sys.executable, str(ROOT / "jobs" / "materialize_features.py"),
+         "--sequences", seqs, "--out", str(out), "--buckets", "32"],
+        cwd=tmp_path, env=_plain_env(SPARK_GRAFT_CPUS="2"),
+        capture_output=True, text=True, timeout=600,
+    )
+    assert res.returncode == 0, res.stderr[-3000:]
+    assert len(list((out / "data").rglob("*.parquet"))) == 32
+    assert not list(out.rglob("*.crc"))
