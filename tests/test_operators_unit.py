@@ -361,21 +361,31 @@ def test_simhash_md5_portability_contract(spark):
         assert r["h1"] == ref_word(r["s"], 16), r["s"]
 
 
-def test_simhash_md5_finds_planted_dup(spark):
-    """Exact duplicate (hamming 0 ≤ 3 — inside the pigeonhole guarantee)
-    must be found; unrelated random docs (hamming ~64 of 128) must not."""
+def _simhash_planted_dup(spark, seed, n_docs):
     from combinedfeatureextraction_spark.operators.dedup import simhash_dedup
 
+    rng = np.random.default_rng(seed)
     vocab = [f"w{i}" for i in range(1000)]
-    for seed, n_docs in ((17, 30), (23, 20)):
-        rng = np.random.default_rng(seed)
-        texts = [" ".join(rng.choice(vocab, 80)) for _ in range(n_docs)]
-        rows = [(i, t) for i, t in enumerate(texts)]
-        rows.append((100, texts[0]))  # exact dup of doc 0
-        df = _df(spark, rows, "id long, t string")
-        out = simhash_dedup(df, "id", "t", max_hamming=3).toPandas()
-        assert set(zip(out["id_a"], out["id_b"])) == {(0, 100)}
-        assert out["hamming"].tolist() == [0]
+    texts = [" ".join(rng.choice(vocab, 80)) for _ in range(n_docs)]
+    rows = [(i, t) for i, t in enumerate(texts)]
+    rows.append((100, texts[0]))  # exact dup of doc 0
+    df = _df(spark, rows, "id long, t string")
+    out = simhash_dedup(df, "id", "t", max_hamming=3).toPandas()
+    assert set(zip(out["id_a"], out["id_b"])) == {(0, 100)}
+    assert out["hamming"].tolist() == [0]
+
+
+def test_simhash_finds_planted_dup(spark):
+    """Exact duplicate (hamming 0 ≤ 3 — inside the pigeonhole guarantee)
+    must be found; unrelated random docs (hamming ~64 of 128) must not."""
+    _simhash_planted_dup(spark, seed=17, n_docs=30)
+
+
+def test_simhash_md5_finds_planted_dup(spark):
+    """The md5 hasher (the one simhash hasher) keeps the same contract on
+    a second corpus: exact duplicate found at hamming 0, unrelated docs
+    rejected."""
+    _simhash_planted_dup(spark, seed=23, n_docs=20)
 
 
 def test_simhash_banding_pigeonhole(spark):
